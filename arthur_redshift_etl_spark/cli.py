@@ -255,24 +255,14 @@ def cmd_extract(args) -> int:
     write — one plan, any transport)."""
     from .sources.jdbc import plan_extract
 
-    spark = None
-    upstream = None  # (read_plan_fn, upstream_path)
-    if getattr(args, "duckdb_path", None) and getattr(args, "sqlite_path", None):
-        print(
-            "error: --duckdb-path and --sqlite-path are mutually exclusive",
-            file=sys.stderr,
-        )
-        return 2
-    if getattr(args, "duckdb_path", None):
-        from .sources.duckdb_source import read_plan as _rp
+    spark = source = None
+    upstream = args.duckdb_path or args.sqlite_path
+    if upstream:
+        from .sources.duckdb_source import DuckDBDataSource
+        from .sources.sqlite_source import SQLiteDataSource
 
-        upstream = (_rp, args.duckdb_path)
-    elif getattr(args, "sqlite_path", None):
-        from .sources.sqlite_source import read_plan as _rp
-
-        upstream = (_rp, args.sqlite_path)
-    if upstream is not None:
-        if not getattr(args, "output_dir", None):
+        source = DuckDBDataSource if args.duckdb_path else SQLiteDataSource
+        if not args.output_dir:
             print(
                 "error: an upstream path requires --output-dir",
                 file=sys.stderr,
@@ -337,12 +327,11 @@ def cmd_extract(args) -> int:
             "num_partitions": plan.num_partitions,
             "boundary_query": plan.boundary_query,
         }
-        if upstream is not None:
-            read_plan_fn, upstream_path = upstream
+        if source is not None:
             target = os.path.join(
                 args.output_dir, *rel.identifier.split(".", 1)
             )
-            read_plan_fn(spark, upstream_path, plan).write.mode(
+            source.read_plan(spark, upstream, plan).write.mode(
                 "overwrite"
             ).parquet(target)
             row["output"] = target
@@ -1302,8 +1291,14 @@ def cmd_terminate_builds(args) -> int:
     return rc
 
 
+class _ArgumentParser(argparse.ArgumentParser):
+    def error(self, message):
+        # argparse words a mutually exclusive group conflict as "not allowed with"
+        super().error(message.replace("not allowed with", "mutually exclusive with"))
+
+
 def build_parser() -> argparse.ArgumentParser:
-    p = argparse.ArgumentParser(prog="arthur-spark", description=__doc__)
+    p = _ArgumentParser(prog="arthur-spark", description=__doc__)
     p.add_argument("--repo", default=".", help="design repository root")
     p.add_argument("--version", action="version", version=__version__)
     sub = p.add_subparsers(dest="command", required=True)
@@ -1360,12 +1355,13 @@ def build_parser() -> argparse.ArgumentParser:
                     help="how to interpret --last-seen; 'string' stops "
                          "numeric-looking varchar marks ('0050', '1e5') "
                          "being coerced to numbers")
-    sp.add_argument("--duckdb-path",
-                    help="RUN the extract against this DuckDB upstream "
-                         "instead of only printing the plan")
-    sp.add_argument("--sqlite-path",
-                    help="RUN the extract against this SQLite upstream "
-                         "(same plan, second transport)")
+    upstream = sp.add_mutually_exclusive_group()
+    upstream.add_argument("--duckdb-path",
+                          help="RUN the extract against this DuckDB upstream "
+                               "instead of only printing the plan")
+    upstream.add_argument("--sqlite-path",
+                          help="RUN the extract against this SQLite upstream "
+                               "(same plan, second transport)")
     sp.add_argument("--output-dir",
                     help="lake directory for upstream extracts "
                          "(<dir>/<schema>/<table> parquet per relation)")
@@ -1524,7 +1520,10 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: Optional[List[str]] = None) -> int:
-    args = build_parser().parse_args(argv)
+    try:
+        args = build_parser().parse_args(argv)
+    except SystemExit as exc:  # usage error, --help or --version
+        return exc.code
     return args.fn(args)
 
 

@@ -71,15 +71,18 @@ def _unwrap_cached_physical(imr_jnode):
     ADVICE r13: initialPlan() relies on that bytecode accident surviving
     Spark upgrades, so fall back to inputPlan()/executedPlan() rather than
     letting the whole pin go opaque on a signature change (the armed test
-    in test_lint_gate still pins the initialPlan path on this version)."""
+    in test_lint_gate still pins the initialPlan path on this version).
+    When every accessor fails the last error is re-raised, so the caller
+    counts the pin as opaque instead of walking the childless wrapper."""
     phys = imr_jnode.cachedPlan()
-    if phys.nodeName() == "AdaptiveSparkPlan":
-        for meth in ("initialPlan", "inputPlan", "executedPlan"):
-            try:
-                return getattr(phys, meth)()
-            except Exception:  # noqa: BLE001 - try the next accessor
-                continue
-    return phys
+    if phys.nodeName() != "AdaptiveSparkPlan":
+        return phys
+    for meth in ("initialPlan", "inputPlan", "executedPlan"):
+        try:
+            return getattr(phys, meth)()
+        except Exception as exc:  # noqa: BLE001 - try the next accessor
+            last = exc
+    raise last
 
 
 def _fact_scans_from_path(ident: str) -> List[str]:

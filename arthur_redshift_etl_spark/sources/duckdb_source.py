@@ -9,25 +9,15 @@ doing so demonstrates the engine's source EXTENSIBILITY path: any
 Python-readable system becomes a first-class, partition-parallel,
 filter-pushing Spark source by subclassing ``DataSource``.
 
-The same Sqoop-analog planning applies, but implemented in the
-DataSource hooks where Spark expects them:
+The Sqoop-analog planning (boundary query, key ranges, bind-parameter
+pushdown, per-range SQL) lives in ``sources/keyrange.py``.  DuckDB adds:
 
-- ``partitions()``  — boundary query (MIN/MAX of the split column) then
-  N half-open key ranges, one Spark task each (sqoop's ``--split-by`` /
-  ``--num-mappers``);
-- ``pushFilters()`` — comparisons, null checks, IN lists, and string
-  prefixes translate to parameterized SQL in the per-partition query, so
-  the upstream prunes before a byte crosses into Spark (the reference
-  pushes WHERE into sqoop's ``--query``); unsupported shapes are yielded
-  back and Spark re-applies them above the scan;
-- ``read()``        — each task opens its own read-only connection and
-  streams Arrow record batches straight out of DuckDB (zero
-  row-at-a-time Python conversion; Spark ingests the batches directly).
-
-Column pruning is NOT available in the Python DataSource API (the reader
-receives the full schema), so narrow extracts should use ``query=`` with
-an explicit projection — same advice as the reference's extract
-``columns`` setting.
+- ``schema()`` from ``DESCRIBE``, mapped through ``_TYPE_MAP``;
+- string-prefix pushdown: ``StringStartsWith`` becomes ``starts_with``;
+- ``read()`` streams Arrow record batches straight out of DuckDB (zero
+  row-at-a-time Python conversion; Spark ingests the batches directly);
+- a cursor-offset change feed (``readStream``), its partitioned batch
+  twin ``batch_change_feed``, and a two-phase-commit writer.
 
 Usage::
 
@@ -45,27 +35,15 @@ from __future__ import annotations
 import os
 import shutil
 from dataclasses import dataclass
-from typing import Iterator, List, Sequence
 
 from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    InputPartition,
-    IsNotNull,
-    IsNull,
-    StringStartsWith,
     DataSourceArrowWriter,
-    LessThan,
-    LessThanOrEqual,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from .keyrange import BATCH_ROWS, KeyRangeDataSource, KeyRangeReader
 
 # DuckDB -> Spark DDL type map (the subset the synthetic + TPC-H tables
 # use, plus the common scalars; unsupported types raise at schema time
@@ -103,52 +81,28 @@ def _connect(path: str):
     return duckdb.connect(path, read_only=True)
 
 
-@dataclass
-class _Range(InputPartition):
-    lo: object = None  # None = unbounded (single-partition or edge range)
-    hi: object = None
+class DuckDBReader(KeyRangeReader):
+    # starts_with() is a case-sensitive byte-prefix test in DuckDB,
+    # matching Spark's semantics — and sidesteps LIKE wildcard escaping
+    # since the prefix binds as a parameter
+    PUSH_PREFIX = True
+    connect = staticmethod(_connect)
+
+    def _batches(self, con, sql, params):
+        yield from con.execute(sql, params).fetch_record_batch(BATCH_ROWS)
 
 
-def _key_ranges(lo, hi, n_parts: int):
-    """[lo, hi] -> n contiguous half-open ranges; first lo / last hi are
-    unbounded so boundary rows and concurrent tail growth are never lost.
-    Integer keys dedupe collapsed bounds (narrow spans yield fewer ranges,
-    never an empty one). Property-tested in tests/test_duckdb_source.py."""
-    if lo is None or hi is None or lo == hi or n_parts <= 1:
-        return [_Range()]
-    span = (hi - lo) / n_parts
-    bounds = [lo + span * i for i in range(1, n_parts)]
-    if isinstance(lo, int):
-        bounds = sorted({int(b) for b in bounds})
-    bounds = [b for b in bounds if lo < b <= hi]
-    ranges = []
-    prev = None
-    for b in bounds:
-        ranges.append(_Range(lo=prev, hi=b))
-        prev = b
-    ranges.append(_Range(lo=prev, hi=None))
-    return ranges
-
-
-class DuckDBDataSource(DataSource):
+class DuckDBDataSource(KeyRangeDataSource):
     """``format("duckdb")`` — see module docstring."""
+
+    reader_class = DuckDBReader
 
     @classmethod
     def name(cls) -> str:
         return "duckdb"
 
-    def _relation_sql(self) -> str:
-        table = self.options.get("table")
-        query = self.options.get("query")
-        if bool(table) == bool(query):
-            raise ValueError("exactly one of table= / query= is required")
-        return f"({query}) AS q" if query else table
-
     def schema(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("path= (duckdb database file) is required")
-        con = _connect(path)
+        con = _connect(self._path())
         try:
             rows = con.execute(
                 f"DESCRIBE SELECT * FROM {self._relation_sql()}"
@@ -160,9 +114,6 @@ class DuckDBDataSource(DataSource):
         )
         return cols
 
-    def reader(self, schema: StructType) -> "DuckDBReader":
-        return DuckDBReader(dict(self.options), self._relation_sql(), schema)
-
     def simpleStreamReader(self, schema: StructType) -> "DuckDBChangeFeedReader":
         return DuckDBChangeFeedReader(dict(self.options), self._relation_sql(), schema)
 
@@ -170,145 +121,9 @@ class DuckDBDataSource(DataSource):
         return DuckDBWriter(dict(self.options), schema, overwrite)
 
 
-class DuckDBReader(DataSourceReader):
-    def __init__(self, options: dict, relation_sql: str, schema: StructType):
-        self.path = options["path"]
-        self.relation = relation_sql
-        self.schema = schema
-        self.split_by = options.get("partition_column")
-        self.n_parts = int(options.get("num_partitions") or 1)
-        self.batch_rows = int(options.get("batch_rows") or 65536)
-        self.where: List[str] = []
-        self.params: List[object] = []
-        if self.n_parts > 1 and not self.split_by:
-            raise ValueError("num_partitions > 1 requires partition_column=")
-
-    # -- filter pushdown ----------------------------------------------
-    _OPS = {
-        EqualTo: "=",
-        GreaterThan: ">",
-        GreaterThanOrEqual: ">=",
-        LessThan: "<",
-        LessThanOrEqual: "<=",
-    }
-
-    def pushFilters(self, filters: List[Filter]) -> Iterator[Filter]:
-        # NOTE: planning runs in a separate Python worker process, so
-        # acceptance is observable only through the plan (no Filter node
-        # survives above the scan) — pinned in tests/test_duckdb_source.py
-        for f in filters:
-            col = f.attribute[0] if len(f.attribute) == 1 else None
-            known = col is not None and col in self.schema.fieldNames()
-            if known and type(f) in self._OPS:
-                # parameterized, never interpolated: the value crosses as
-                # a bind parameter so quoting/injection is a non-issue
-                self.where.append(f'"{col}" {self._OPS[type(f)]} ?')
-                self.params.append(f.value)
-            elif known and isinstance(f, IsNull):
-                self.where.append(f'"{col}" IS NULL')
-            elif known and isinstance(f, IsNotNull):
-                self.where.append(f'"{col}" IS NOT NULL')
-            elif known and isinstance(f, In) and len(f.value) > 0:
-                # point-lookup list: one bind slot per element (an empty
-                # IN () is invalid SQL — yielded back, Spark keeps it)
-                slots = ", ".join("?" for _ in f.value)
-                self.where.append(f'"{col}" IN ({slots})')
-                self.params.extend(f.value)
-            elif known and isinstance(f, StringStartsWith):
-                # starts_with() is a case-sensitive byte-prefix test in
-                # DuckDB, matching Spark's semantics — and sidesteps LIKE
-                # wildcard escaping since the prefix binds as a parameter
-                self.where.append(f'starts_with("{col}", ?)')
-                self.params.append(f.value)
-            else:
-                yield f  # Spark re-applies what the source can't handle
-
-    # -- partition planning (sqoop boundary-query analog) --------------
-    def partitions(self) -> Sequence[_Range]:
-        if self.n_parts <= 1:
-            return [_Range()]
-        con = _connect(self.path)
-        try:
-            lo, hi = con.execute(
-                f'SELECT MIN("{self.split_by}"), MAX("{self.split_by}") '
-                f"FROM {self.relation}"
-            ).fetchone()
-        finally:
-            con.close()
-        return _key_ranges(lo, hi, self.n_parts)
-
-    # -- per-task read ---------------------------------------------------
-    def read(self, partition: _Range):
-        where = list(self.where)
-        params = list(self.params)
-        if partition.lo is not None:
-            where.append(f'"{self.split_by}" >= ?')
-            params.append(partition.lo)
-        if partition.hi is not None:
-            where.append(f'"{self.split_by}" < ?')
-            params.append(partition.hi)
-        cols = ", ".join(f'"{c}"' for c in self.schema.fieldNames())
-        sql = f"SELECT {cols} FROM {self.relation}"
-        if where:
-            sql += " WHERE " + " AND ".join(where)
-        con = _connect(self.path)
-        try:
-            reader = con.execute(sql, params).fetch_record_batch(self.batch_rows)
-            while True:
-                try:
-                    yield reader.read_next_batch()
-                except StopIteration:
-                    break
-        finally:
-            con.close()
-
-
-def register_duckdb_source(spark) -> None:
-    """Register ``format("duckdb")`` on this session (idempotent)."""
-    # runtime conf (engine sessions set it at build; cover foreign sessions)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(DuckDBDataSource)
-
-
-def read_plan(spark, path: str, plan):
-    """Execute a ``JdbcExtractPlan`` through ``format("duckdb")``.
-
-    The single plan→reader translation used by both :func:`extract_design`
-    and the CLI's ``extract --duckdb-path``.  Expression split keys (the
-    temporal-PK case: ``find_partition_key`` wraps date/timestamp keys in
-    a Spark-only ``CAST(unix_timestamp(...))``) can't be quoted as an
-    upstream column, so those plans fall back to a single-range read —
-    the same ``"(" not in key`` guard the sampling planner applies.
-    """
-    register_duckdb_source(spark)
-    r = spark.read.format("duckdb").option("path", path).option("query", plan.query)
-    key = plan.partition_column
-    if key and "(" not in key and plan.num_partitions > 1:
-        r = (
-            r.option("partition_column", key)
-            .option("num_partitions", str(plan.num_partitions))
-        )
-    return r.load()
-
-
-def extract_design(spark, design, path: str, use_sampling: bool = False,
-                   table_size_bytes: int | None = None):
-    """Design-driven extract through ``format("duckdb")``.
-
-    The same planning the JDBC path applies to a table design
-    (``sources/jdbc.plan_extract``: projection + per-column cast
-    expressions, WHERE condition, sampling key, split-by column and the
-    multiple-of-4 partition-count heuristic) executed against a DuckDB
-    upstream — one designs file drives either transport.
-    """
-    from .jdbc import FALLBACK_TABLE_SIZE, plan_extract
-
-    plan = plan_extract(
-        design,
-        table_size_bytes=table_size_bytes or FALLBACK_TABLE_SIZE,
-        use_sampling=use_sampling,
-    )
-    return read_plan(spark, path, plan)
+register_duckdb_source = DuckDBDataSource.register
+read_plan = DuckDBDataSource.read_plan
+extract_design = DuckDBDataSource.extract_design
 
 
 class DuckDBChangeFeedReader(SimpleDataSourceStreamReader):
@@ -678,18 +493,15 @@ def batch_change_feed(
     if os.path.isdir(dest):
         shutil.rmtree(dest)  # recovery loop above proved it incomplete
 
-    register_duckdb_source(spark)
-    r = (
-        spark.read.format("duckdb")
-        .option("path", path)
-        .option("query", delta_sql)
+    from .jdbc import JdbcExtractPlan
+
+    delta = JdbcExtractPlan(
+        query=delta_sql,
+        partition_column=cursor_column,
+        num_partitions=num_partitions,
+        boundary_query=None,
     )
-    if num_partitions > 1:
-        r = r.option("partition_column", cursor_column).option(
-            "num_partitions", str(num_partitions)
-        )
-    df = r.load()
-    df.write.mode("overwrite").parquet(dest)
+    read_plan(spark, path, delta).write.mode("overwrite").parquet(dest)
     with open(os.path.join(dest, "_bounds.json"), "w") as fh:
         json.dump(
             {"lo": "" if last is None else str(last), "hi": str(hi)}, fh

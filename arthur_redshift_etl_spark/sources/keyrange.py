@@ -1,0 +1,255 @@
+"""Key-range extract template shared by the Python DataSource upstreams.
+
+The reference extracts through Sqoop: one database-agnostic splitter that
+runs a boundary query, cuts N key ranges and runs one mapper per range
+(python/etl/extract/sqoop.py: split column, boundary query, N parallel
+mappers).  This module is that splitter, written once, in the DataSource
+hooks where Spark expects it:
+
+- ``partitions()``  — boundary query (the design's ``boundary_query`` when
+  set, else MIN/MAX of the split column) then N half-open key ranges, one
+  Spark task each (sqoop's ``--split-by`` / ``--num-mappers``);
+- ``pushFilters()`` — comparisons, null checks and IN lists translate to
+  parameterized SQL in the per-partition query, so the upstream prunes
+  before a byte crosses into Spark (the reference pushes WHERE into
+  sqoop's ``--query``); unsupported shapes are yielded back and Spark
+  re-applies them above the scan;
+- ``read()``        — each task opens its own read-only connection and
+  streams Arrow record batches of ``BATCH_ROWS`` rows into Spark.
+
+Each engine (``duckdb_source``, ``sqlite_source``) supplies only what
+really differs: how to connect, ``schema()``, how to fetch batches, and
+whether a string-prefix predicate can be pushed.
+
+Column pruning is NOT available in the Python DataSource API (the reader
+receives the full schema), so narrow extracts should use ``query=`` with
+an explicit projection — same advice as the reference's extract
+``columns`` setting.
+"""
+
+from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Iterator, List, Sequence
+
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    EqualTo,
+    Filter,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
+    InputPartition,
+    IsNotNull,
+    IsNull,
+    LessThan,
+    LessThanOrEqual,
+    StringStartsWith,
+)
+from pyspark.sql.types import StructType
+
+# Rows per Arrow batch.  Swept at 8k/64k/512k on both engines (SCALE.md
+# "batch_rows sweep"): duckdb is flat, sqlite peaks here.
+BATCH_ROWS = 65536
+
+
+@dataclass
+class _Range(InputPartition):
+    lo: object = None  # None = unbounded (single-partition or edge range)
+    hi: object = None
+
+
+def _key_ranges(lo, hi, n_parts: int):
+    """[lo, hi] -> n contiguous half-open ranges; first lo / last hi are
+    unbounded so boundary rows and concurrent tail growth are never lost.
+    Integer keys dedupe collapsed bounds (narrow spans yield fewer ranges,
+    never an empty one). Property-tested in tests/test_duckdb_source.py."""
+    if lo is None or hi is None or lo == hi or n_parts <= 1:
+        return [_Range()]
+    span = (hi - lo) / n_parts
+    bounds = [lo + span * i for i in range(1, n_parts)]
+    if isinstance(lo, int):
+        bounds = sorted({int(b) for b in bounds})
+    bounds = [b for b in bounds if lo < b <= hi]
+    ranges = []
+    prev = None
+    for b in bounds:
+        ranges.append(_Range(lo=prev, hi=b))
+        prev = b
+    ranges.append(_Range(lo=prev, hi=None))
+    return ranges
+
+
+class KeyRangeReader(DataSourceReader):
+    """Filter pushdown, range planning and per-range SQL for one engine.
+
+    Subclasses set ``connect`` and ``PUSH_PREFIX`` and implement
+    ``_batches``."""
+
+    PUSH_PREFIX = False  # push StringStartsWith as starts_with(col, ?)
+
+    def __init__(self, options: dict, relation_sql: str, schema: StructType):
+        self.path = options["path"]
+        self.relation = relation_sql
+        self.schema = schema
+        self.split_by = options.get("partition_column")
+        self.n_parts = int(options.get("num_partitions") or 1)
+        self.boundary_query = options.get("boundary_query")
+        self.where: List[str] = []
+        self.params: List[object] = []
+        if self.n_parts > 1 and not self.split_by:
+            raise ValueError("num_partitions > 1 requires partition_column=")
+
+    @staticmethod
+    def connect(path: str):
+        raise NotImplementedError
+
+    def _batches(self, con, sql: str, params: list) -> Iterator:
+        """Arrow record batches of ``sql`` run with bind ``params``."""
+        raise NotImplementedError
+
+    # -- filter pushdown ----------------------------------------------
+    _OPS = {
+        EqualTo: "=",
+        GreaterThan: ">",
+        GreaterThanOrEqual: ">=",
+        LessThan: "<",
+        LessThanOrEqual: "<=",
+    }
+
+    def pushFilters(self, filters: List[Filter]) -> Iterator[Filter]:
+        # NOTE: planning runs in a separate Python worker process, so
+        # acceptance is observable only through the plan (no Filter node
+        # survives above the scan) — pinned in tests/test_duckdb_source.py
+        for f in filters:
+            col = f.attribute[0] if len(f.attribute) == 1 else None
+            known = col is not None and col in self.schema.fieldNames()
+            if known and type(f) in self._OPS:
+                # parameterized, never interpolated: the value crosses as
+                # a bind parameter so quoting/injection is a non-issue
+                self.where.append(f'"{col}" {self._OPS[type(f)]} ?')
+                self.params.append(f.value)
+            elif known and isinstance(f, IsNull):
+                self.where.append(f'"{col}" IS NULL')
+            elif known and isinstance(f, IsNotNull):
+                self.where.append(f'"{col}" IS NOT NULL')
+            elif known and isinstance(f, In) and len(f.value) > 0:
+                # point-lookup list: one bind slot per element (an empty
+                # IN () is invalid SQL — yielded back, Spark keeps it)
+                slots = ", ".join("?" for _ in f.value)
+                self.where.append(f'"{col}" IN ({slots})')
+                self.params.extend(f.value)
+            elif known and self.PUSH_PREFIX and isinstance(f, StringStartsWith):
+                self.where.append(f'starts_with("{col}", ?)')
+                self.params.append(f.value)
+            else:
+                yield f  # Spark re-applies what the source can't handle
+
+    # -- partition planning (sqoop boundary-query analog) --------------
+    def partitions(self) -> Sequence[_Range]:
+        if self.n_parts <= 1:
+            return [_Range()]
+        # a boundary query returns one (lo, hi) row; the edge ranges stay
+        # unbounded, so one narrower than the data moves the split points
+        # but loses no row
+        sql = self.boundary_query or (
+            f'SELECT MIN("{self.split_by}"), MAX("{self.split_by}") '
+            f"FROM {self.relation}"
+        )
+        con = self.connect(self.path)
+        try:
+            lo, hi = con.execute(sql).fetchone()
+        finally:
+            con.close()
+        return _key_ranges(lo, hi, self.n_parts)
+
+    # -- per-task read ---------------------------------------------------
+    def read(self, partition: _Range):
+        where = list(self.where)
+        params = list(self.params)
+        if partition.lo is not None:
+            where.append(f'"{self.split_by}" >= ?')
+            params.append(partition.lo)
+        if partition.hi is not None:
+            where.append(f'"{self.split_by}" < ?')
+            params.append(partition.hi)
+        cols = ", ".join(f'"{c}"' for c in self.schema.fieldNames())
+        sql = f"SELECT {cols} FROM {self.relation}"
+        if where:
+            sql += " WHERE " + " AND ".join(where)
+        con = self.connect(self.path)
+        try:
+            yield from self._batches(con, sql, params)
+        finally:
+            con.close()
+
+
+class KeyRangeDataSource(DataSource):
+    """Options: path=, table= (or query=), partition_column=,
+    num_partitions=, boundary_query=.  Subclasses set ``name()`` and
+    ``reader_class`` and implement ``schema()``."""
+
+    reader_class: type  # the engine's KeyRangeReader subclass
+
+    def _path(self) -> str:
+        path = self.options.get("path")
+        if not path:
+            raise ValueError(f"path= ({self.name()} database file) is required")
+        return path
+
+    def _relation_sql(self) -> str:
+        table = self.options.get("table")
+        query = self.options.get("query")
+        if bool(table) == bool(query):
+            raise ValueError("exactly one of table= / query= is required")
+        return f"({query}) AS q" if query else table
+
+    def reader(self, schema: StructType) -> KeyRangeReader:
+        return self.reader_class(dict(self.options), self._relation_sql(), schema)
+
+    @classmethod
+    def register(cls, spark) -> None:
+        """Register this format on the session (idempotent)."""
+        # runtime conf (engine sessions set it at build; cover foreign sessions)
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+        spark.dataSource.register(cls)
+
+    @classmethod
+    def read_plan(cls, spark, path: str, plan):
+        """Execute a ``JdbcExtractPlan`` through this format.
+
+        The single plan→reader translation used by :meth:`extract_design`,
+        the CLI's ``extract --duckdb-path`` / ``--sqlite-path`` and the
+        firehose change feed.  Expression split keys (the temporal-PK case:
+        ``find_partition_key`` wraps date/timestamp keys in a Spark-only
+        ``CAST(unix_timestamp(...))``) can't be quoted as an upstream
+        column, so those plans fall back to a single-range read — the same
+        ``"(" not in key`` guard the sampling planner applies.
+        """
+        cls.register(spark)
+        r = spark.read.format(cls.name()).option("path", path).option("query", plan.query)
+        key = plan.partition_column
+        if key and "(" not in key and plan.num_partitions > 1:
+            r = (
+                r.option("partition_column", key)
+                .option("num_partitions", str(plan.num_partitions))
+            )
+            if plan.boundary_query:
+                r = r.option("boundary_query", plan.boundary_query)
+        return r.load()
+
+    @classmethod
+    def extract_design(cls, spark, design, path: str):
+        """Design-driven extract through this format.
+
+        The same planning the JDBC path applies to a table design
+        (``sources/jdbc.plan_extract``: projection + per-column cast
+        expressions, WHERE condition, split-by column, boundary query and
+        the multiple-of-4 partition-count heuristic) executed against this
+        upstream — one designs file drives every transport, the
+        reference's Sqoop promise of a database-agnostic splitter.
+        """
+        from .jdbc import plan_extract
+
+        return cls.read_plan(spark, path, plan_extract(design))

@@ -1,12 +1,11 @@
 """SQLite upstream via the Spark Python DataSource API — engine #2.
 
-The second non-JDBC upstream behind ``format("sqlite")``, sharing the
-range-partition planning contract with the DuckDB source (boundary query
-MIN/MAX on a split column -> contiguous half-open key ranges with
-unbounded edges, ``_key_ranges`` imported from there): the point is that
-the extract TEMPLATE — plan ranges on the driver, push predicates as bind
-parameters, stream batches per task — is engine-agnostic, exactly like the
-reference's Sqoop extract was database-agnostic behind one splitter
+The second non-JDBC upstream behind ``format("sqlite")``, on the same
+key-range extract template as the DuckDB source (``sources/keyrange.py``:
+boundary query -> contiguous half-open key ranges with unbounded edges,
+predicates pushed as bind parameters, batches streamed per task): the
+template is engine-agnostic, exactly like the reference's Sqoop extract
+was database-agnostic behind one splitter
 (harrystech/arthur-redshift-etl python/etl/extract/sqoop.py).
 
 Engine differences, handled here:
@@ -31,24 +30,7 @@ task can never mutate the upstream.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    EqualTo,
-    Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
-    IsNotNull,
-    IsNull,
-    LessThan,
-    LessThanOrEqual,
-)
-from pyspark.sql.types import StructType
-
-from .duckdb_source import _key_ranges, _Range
+from .keyrange import BATCH_ROWS, KeyRangeDataSource, KeyRangeReader
 
 
 def _connect(path: str):
@@ -71,26 +53,48 @@ def _decl_to_ddl(decltype: str) -> str:
     return "string"
 
 
-class SQLiteDataSource(DataSource):
+class SQLiteReader(KeyRangeReader):
+    connect = staticmethod(_connect)
+
+    def _batches(self, con, sql, params):
+        import pyarrow as pa
+
+        pa_types = {
+            "long": pa.int64(),
+            "bigint": pa.int64(),
+            "double": pa.float64(),
+            "string": pa.string(),
+        }
+        arrow_schema = pa.schema(
+            [
+                (f.name, pa_types.get(f.dataType.simpleString(), pa.string()))
+                for f in self.schema.fields
+            ]
+        )
+        cur = con.execute(sql, params)
+        while True:
+            rows = cur.fetchmany(BATCH_ROWS)
+            if not rows:
+                break
+            arrays = [
+                pa.array([r[i] for r in rows], type=field.type)
+                for i, field in enumerate(arrow_schema)
+            ]
+            yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+
+
+class SQLiteDataSource(KeyRangeDataSource):
     """``format("sqlite")`` — options: path=, table= (or query=),
-    partition_column=, num_partitions=, batch_rows=."""
+    partition_column=, num_partitions=, boundary_query=."""
+
+    reader_class = SQLiteReader
 
     @classmethod
     def name(cls) -> str:
         return "sqlite"
 
-    def _relation_sql(self) -> str:
-        table = self.options.get("table")
-        query = self.options.get("query")
-        if bool(table) == bool(query):
-            raise ValueError("exactly one of table= / query= is required")
-        return f"({query}) AS q" if query else table
-
     def schema(self) -> str:
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("path= (sqlite database file) is required")
-        con = _connect(path)
+        con = _connect(self._path())
         try:
             table = self.options.get("table")
             if table:
@@ -153,146 +157,7 @@ class SQLiteDataSource(DataSource):
             con.close()
         return ", ".join(f"{n} {t}" for n, t in cols)
 
-    def reader(self, schema: StructType) -> "SQLiteReader":
-        return SQLiteReader(dict(self.options), self._relation_sql(), schema)
 
-
-class SQLiteReader(DataSourceReader):
-    def __init__(self, options: dict, relation_sql: str, schema: StructType):
-        self.path = options["path"]
-        self.relation = relation_sql
-        self.schema = schema
-        self.split_by = options.get("partition_column")
-        self.n_parts = int(options.get("num_partitions") or 1)
-        self.batch_rows = int(options.get("batch_rows") or 65536)
-        self.where: List[str] = []
-        self.params: List[object] = []
-        if self.n_parts > 1 and not self.split_by:
-            raise ValueError("num_partitions > 1 requires partition_column=")
-
-    _OPS = {
-        EqualTo: "=",
-        GreaterThan: ">",
-        GreaterThanOrEqual: ">=",
-        LessThan: "<",
-        LessThanOrEqual: "<=",
-    }
-
-    def pushFilters(self, filters: List[Filter]) -> Iterator[Filter]:
-        for f in filters:
-            col = f.attribute[0] if len(f.attribute) == 1 else None
-            known = col is not None and col in self.schema.fieldNames()
-            if known and type(f) in self._OPS:
-                self.where.append(f'"{col}" {self._OPS[type(f)]} ?')
-                self.params.append(f.value)
-            elif known and isinstance(f, IsNull):
-                self.where.append(f'"{col}" IS NULL')
-            elif known and isinstance(f, IsNotNull):
-                self.where.append(f'"{col}" IS NOT NULL')
-            elif known and isinstance(f, In) and len(f.value) > 0:
-                slots = ", ".join("?" for _ in f.value)
-                self.where.append(f'"{col}" IN ({slots})')
-                self.params.extend(f.value)
-            else:
-                yield f  # incl. StringStartsWith — Spark re-applies it
-
-    def partitions(self) -> Sequence[_Range]:
-        if self.n_parts <= 1:
-            return [_Range()]
-        con = _connect(self.path)
-        try:
-            lo, hi = con.execute(
-                f'SELECT MIN("{self.split_by}"), MAX("{self.split_by}") '
-                f"FROM {self.relation}"
-            ).fetchone()
-        finally:
-            con.close()
-        return _key_ranges(lo, hi, self.n_parts)
-
-    def read(self, partition: _Range):
-        import pyarrow as pa
-
-        where = list(self.where)
-        params = list(self.params)
-        if partition.lo is not None:
-            where.append(f'"{self.split_by}" >= ?')
-            params.append(partition.lo)
-        if partition.hi is not None:
-            where.append(f'"{self.split_by}" < ?')
-            params.append(partition.hi)
-        names = self.schema.fieldNames()
-        pa_types = {
-            "long": pa.int64(),
-            "bigint": pa.int64(),
-            "double": pa.float64(),
-            "string": pa.string(),
-        }
-        arrow_schema = pa.schema(
-            [
-                (f.name, pa_types.get(f.dataType.simpleString(), pa.string()))
-                for f in self.schema.fields
-            ]
-        )
-        cols = ", ".join(f'"{c}"' for c in names)
-        sql = f"SELECT {cols} FROM {self.relation}"
-        if where:
-            sql += " WHERE " + " AND ".join(where)
-        con = _connect(self.path)
-        try:
-            cur = con.execute(sql, params)
-            while True:
-                rows = cur.fetchmany(self.batch_rows)
-                if not rows:
-                    break
-                arrays = [
-                    pa.array(
-                        [r[i] for r in rows], type=arrow_schema.field(i).type
-                    )
-                    for i in range(len(names))
-                ]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-        finally:
-            con.close()
-
-
-def register_sqlite_source(spark) -> None:
-    """Idempotent registration + worker-side filter pushdown enablement
-    (same flag the DuckDB source needs)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        spark.dataSource.register(SQLiteDataSource)
-    except Exception:  # noqa: BLE001 - already registered in this session
-        pass
-
-
-def read_plan(spark, path: str, plan):
-    """Execute a ``JdbcExtractPlan`` through ``format("sqlite")`` — the
-    same plan→reader translation as the DuckDB transport, engine #2.
-    Expression split keys fall back to a single-range read (same guard)."""
-    register_sqlite_source(spark)
-    r = spark.read.format("sqlite").option("path", path).option("query", plan.query)
-    key = plan.partition_column
-    if key and "(" not in key and plan.num_partitions > 1:
-        r = (
-            r.option("partition_column", key)
-            .option("num_partitions", str(plan.num_partitions))
-        )
-    return r.load()
-
-
-def extract_design(spark, design, path: str, use_sampling: bool = False,
-                   table_size_bytes: int | None = None):
-    """Design-driven extract through ``format("sqlite")``: ONE table design
-    (projection + casts, WHERE condition, sampling key, split-by and the
-    multiple-of-4 partition heuristic from ``sources/jdbc.plan_extract``)
-    now drives THREE transports — JDBC, DuckDB, SQLite — which is the
-    reference's Sqoop promise (a database-agnostic splitter) made
-    concrete."""
-    from .jdbc import FALLBACK_TABLE_SIZE, plan_extract
-
-    plan = plan_extract(
-        design,
-        table_size_bytes=table_size_bytes or FALLBACK_TABLE_SIZE,
-        use_sampling=use_sampling,
-    )
-    return read_plan(spark, path, plan)
+register_sqlite_source = SQLiteDataSource.register
+read_plan = SQLiteDataSource.read_plan
+extract_design = SQLiteDataSource.extract_design

@@ -300,7 +300,7 @@ def compact_stdout_result(result: dict) -> dict:
         return len(json.dumps(d))
 
     for trim in (
-        "host", "queries_cold_fresh", "value_cold_best", "queries_steal_cores"
+        "queries_steal_cores", "host", "queries_cold_fresh", "value_cold_best"
     ):
         if _size(compact) <= LINE_BUDGET:
             break

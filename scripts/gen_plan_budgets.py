@@ -57,6 +57,13 @@ def main() -> None:
         unknown = sorted(set(subset) - set(REGISTRY))
         if unknown:
             raise SystemExit(f"unknown entries: {unknown}")
+        # a renamed or removed entry must not survive the merge
+        # (test_budget_file_covers_registry rejects the file otherwise)
+        stale = sorted(set(budgets) - set(REGISTRY))
+        for name in stale:
+            del budgets[name]
+        if stale:
+            print(f"dropped budgets no longer in REGISTRY: {stale}")
     for name in subset or sorted(REGISTRY):
         budgets[name] = count_exchanges(plan_text(REGISTRY[name].fn(spark, SF)))
         spark.catalog.clearCache()

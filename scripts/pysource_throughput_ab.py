@@ -156,42 +156,6 @@ def main():
         out[f"{name}_scan_wall_s"] = round(scan, 3)
         out[f"{name}_pushed_agg_wall_s"] = round(agg, 3)
 
-    # batch_rows sweep (VERDICT r11 #6): the last untuned knob in the
-    # extract path.  Both engines take batch_rows=; sweep the full scan
-    # wall at each setting (warm run first at that setting).
-    sweep = os.environ.get("SPARK_GRAFT_BATCH_ROWS_SWEEP")
-    if sweep:
-        def duck_b(b):
-            return (
-                spark.read.format("duckdb")
-                .option("path", duck_path)
-                .option("table", "orders")
-                .option("partition_column", "o_orderkey")
-                .option("num_partitions", "8")
-                .option("batch_rows", str(b))
-                .load()
-            )
-
-        def lite_b(b):
-            return (
-                spark.read.format("sqlite")
-                .option("path", lite_path)
-                .option("table", "orders")
-                .option("partition_column", "o_orderkey")
-                .option("num_partitions", "8")
-                .option("batch_rows", str(b))
-                .load()
-            )
-
-        for b in (int(x) for x in sweep.split(",")):
-            for eng, mk in (("duckdb", duck_b), ("sqlite", lite_b)):
-                mk(b).count()  # warm
-                walls = []
-                for _ in range(3):
-                    t0 = time.time()
-                    mk(b).count()
-                    walls.append(time.time() - t0)
-                out[f"{eng}_batch{b}_scan_wall_s"] = round(min(walls), 3)
     print(json.dumps(out))
     spark.stop()
 

@@ -115,6 +115,18 @@ def test_per_query_steal_rides_the_line_filtered(bench):
     assert len(json.dumps(compact)) <= bench.LINE_BUDGET
 
 
+def test_first_trim_drops_per_query_steal_before_host(bench):
+    """ADVICE r14 #4: the run-level host block is what makes per-query
+    steal interpretable, so when the line must shed a key the per-query
+    steal map goes first and host outlives it."""
+    n = len(bench.DEFAULT_QUERIES)
+    while "queries_steal_cores" in bench.compact_stdout_result(_full_result(n)):
+        n += 1  # grow the suite until the line is forced to trim
+    parsed = json.loads(json.dumps(bench.compact_stdout_result(_full_result(n))))
+    assert parsed["host"]["steal_cores"] == 0.14
+    assert "queries_cold_fresh" in parsed and "value_cold_best" in parsed
+
+
 def test_r08_regression_shape_now_parses(bench):
     """The exact field set that overflowed in round 8 compacts to <= budget."""
     result = _full_result(23)

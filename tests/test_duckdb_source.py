@@ -297,7 +297,7 @@ def test_key_ranges_partition_the_keyspace():
         from hypothesis import strategies as st
     except ImportError:
         pytest.skip("hypothesis unavailable")
-    from arthur_redshift_etl_spark.sources.duckdb_source import _key_ranges
+    from arthur_redshift_etl_spark.sources.keyrange import _key_ranges
 
     @settings(max_examples=200, deadline=None)
     @given(
@@ -405,23 +405,84 @@ def test_change_feed_start_cursor_never_rewinds(registered, tmp_path):
     assert ids == list(range(1001, 1200))  # skipped history stays skipped
 
 
-def test_read_plan_expression_split_key_falls_back_single_range(registered, duck_path):
-    """A temporal PK makes find_partition_key return a Spark-only CAST
-    expression; the duckdb transport must fall back to one range instead
-    of quoting the expression as an upstream column."""
-    from arthur_redshift_etl_spark.sources.jdbc import JdbcExtractPlan
-    from arthur_redshift_etl_spark.sources.duckdb_source import read_plan
+def _engine(name, duck_path):
+    """(source module, orders upstream path) for one key-range engine."""
+    from arthur_redshift_etl_spark.sources import duckdb_source, sqlite_source
+    from arthur_redshift_etl_spark.workload import _sqlite_mirror
 
+    if name == "duckdb":
+        return duckdb_source, duck_path
+    return sqlite_source, _sqlite_mirror(SF)
+
+
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite"])
+def test_read_plan_expression_split_key_falls_back_single_range(
+    registered, duck_path, engine
+):
+    """A temporal PK makes find_partition_key return a Spark-only CAST
+    expression; the transport must fall back to one range instead of
+    quoting the expression as an upstream column."""
+    from arthur_redshift_etl_spark.sources.jdbc import JdbcExtractPlan
+
+    source, path = _engine(engine, duck_path)
     plan = JdbcExtractPlan(
         query="SELECT o_orderkey, o_totalprice FROM orders",
         partition_column="CAST(unix_timestamp(o_orderdate) AS BIGINT)",
         num_partitions=4,
         boundary_query=None,
     )
-    df = read_plan(registered, duck_path, plan)
+    df = source.read_plan(registered, path, plan)
     assert df.rdd.getNumPartitions() == 1  # safe fallback, no binder error
     ref = registered.read.parquet(f"{SF}/orders.parquet")
     assert df.count() == ref.count()
+
+
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite"])
+def test_design_boundary_query_sets_split_points(registered, duck_path, engine):
+    """The design's boundary_query, not MIN/MAX, bounds the key ranges: one
+    narrower than the data moves the split points (per-partition counts
+    follow its ranges) and the unbounded last range keeps every row."""
+    from arthur_redshift_etl_spark.design import (
+        ColumnDefinition,
+        ExtractSettings,
+        TableDesign,
+    )
+    from arthur_redshift_etl_spark.sources.keyrange import _key_ranges
+
+    source, path = _engine(engine, duck_path)
+    keys = [
+        r.o_orderkey
+        for r in registered.read.parquet(f"{SF}/orders.parquet")
+        .select("o_orderkey")
+        .collect()
+    ]
+    cut = sorted(keys)[len(keys) // 4]
+    design = TableDesign(
+        name="dw.orders",
+        source_name="up.main.orders",
+        columns=[ColumnDefinition("o_orderkey", "long", not_null=True)],
+        constraints=[{"primary_key": ["o_orderkey"]}],
+        extract_settings=ExtractSettings(
+            boundary_query=(
+                "SELECT MIN(o_orderkey), MAX(o_orderkey) FROM orders "
+                f"WHERE o_orderkey <= {cut}"
+            ),
+            num_partitions=4,
+        ),
+    )
+    df = source.extract_design(registered, design, path)
+    sizes = df.rdd.glom().map(len).collect()
+
+    def in_range(k, r):
+        return (r.lo is None or k >= r.lo) and (r.hi is None or k < r.hi)
+
+    expected = [
+        sum(in_range(k, r) for k in keys)
+        for r in _key_ranges(min(keys), cut, 4)
+    ]
+    assert sizes == expected
+    assert sizes[-1] > len(keys) // 2  # everything past the cut lands last
+    assert sum(sizes) == len(keys)
 
 
 def test_change_feed_protocol_property_no_loss_no_dup(tmp_path):

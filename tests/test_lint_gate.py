@@ -208,6 +208,28 @@ def test_fact_scan_basename_anchoring():
     assert _fact_scans_from_path("/data/events_archive.parquet") == []
 
 
+def test_unwrap_cached_physical_raises_when_every_accessor_fails():
+    """An AQE wrapper none of whose accessors answers must raise, so the
+    audit counts the pin as opaque instead of walking a childless leaf."""
+    from arthur_redshift_etl_spark.plans.lint import _unwrap_cached_physical
+
+    class _Opaque:
+        def nodeName(self):
+            return "AdaptiveSparkPlan"
+
+        def _gone(self):
+            raise AttributeError("accessor removed")
+
+        initialPlan = inputPlan = executedPlan = _gone
+
+    class _Relation:
+        def cachedPlan(self):
+            return _Opaque()
+
+    with pytest.raises(AttributeError, match="accessor removed"):
+        _unwrap_cached_physical(_Relation())
+
+
 def test_big_broadcast_threshold_fires(spark):
     """The size check is live: any hinted subtree trips it when the budget
     is set below its Catalyst estimate."""
