@@ -1172,6 +1172,7 @@ def cmd_disk_usage(args) -> int:
     additional versions."""
     import fnmatch
 
+    from .loader import table_location
     from .names import BACKUP_PREFIX, is_staging
 
     spark = _spark(args)
@@ -1184,16 +1185,13 @@ def cmd_disk_usage(args) -> int:
 
     def table_bytes(identifier):
         try:
-            detail = spark.sql(f"DESCRIBE TABLE EXTENDED {identifier}").collect()
+            loc = table_location(spark, identifier)
         except Exception:
             return None, 0, 0
-        loc = next(
-            (r["data_type"] for r in detail if r["col_name"] == "Location"), None
-        )
         if not loc:
             return None, 0, 0
-        scheme = loc.split("://", 1)[0] if "://" in loc else "file"
-        if scheme not in ("file", ""):
+        if "://" in loc:
+            scheme = loc.split("://", 1)[0]
             # Non-local location (s3a://, hdfs://...): measure through the
             # Hadoop FileSystem API — os.walk would silently report 0 and
             # an empty table is indistinguishable from an unmeasured one.
@@ -1211,9 +1209,8 @@ def cmd_disk_usage(args) -> int:
                     file=sys.stderr,
                 )
                 return loc, None, None
-        path = loc.replace("file:", "")
         n_files = total = 0
-        for root, _, files in os.walk(path):
+        for root, _, files in os.walk(loc):
             for f in files:
                 if f.startswith(("_", ".")):
                     continue

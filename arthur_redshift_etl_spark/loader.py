@@ -66,7 +66,6 @@ class LoadContext:
     etl_id: str = field(default_factory=lambda: uuid.uuid4().hex[:12])
     max_concurrency: int = 4
     skip_copy: bool = False  # structural smoke mode (--skip-copy)
-    analyze: bool = True  # ANALYZE TABLE after load (reference load.py:554-561)
     # post-publish threshold-gated compaction (reference vacuum-after-update,
     # load.py:1360-1367).  OPT-IN like the reference's run_vacuum flag: the
     # probe is metadata-only but still costs a DESCRIBE + storage listing per
@@ -106,18 +105,36 @@ def rewrite_query_for_staging(query: str, identifiers: Iterable[str]) -> str:
     return out
 
 
-def _register_external_table(
-    ctx: LoadContext, db: str, table: str, location: str
-) -> None:
-    full = f"{_quote(db)}.{_quote(table)}"
-    ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
-    ctx.spark.sql(f"CREATE TABLE {full} USING parquet LOCATION '{location}'")
+def _table_type(spark: SparkSession, full: str) -> Optional[str]:
+    """Catalog type of a relation ("VIEW", "EXTERNAL", "MANAGED"), None if absent."""
+    if not spark.catalog.tableExists(full):
+        return None
+    return spark.catalog.getTable(full).tableType
+
+
+def table_location(spark: SparkSession, full: str) -> Optional[str]:
+    """Storage path a table is registered at, without the ``file:`` scheme;
+    None for a view.
+
+    Only the detailed-information section counts: a column named
+    ``Location`` is listed above it.  The rows are filtered in Python, as
+    a DataFrame filter over the DESCRIBE output would run a Spark job.
+    """
+    detailed = False
+    for row in spark.sql(f"DESCRIBE FORMATTED {full}").collect():
+        detailed = detailed or row["col_name"] == "# Detailed Table Information"
+        if detailed and row["col_name"] == "Location":
+            return row["data_type"].replace("file:", "")
+    return None
 
 
 def _drop_relation(ctx: LoadContext, db: str, table: str) -> None:
+    """Drop ``db.table`` whatever its kind: Spark refuses DROP TABLE on a
+    view and DROP VIEW on a table, so the catalog decides which one."""
     full = f"{_quote(db)}.{_quote(table)}"
-    ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
-    ctx.spark.sql(f"DROP VIEW IF EXISTS {full}")
+    kind = _table_type(ctx.spark, full)
+    if kind is not None:
+        ctx.spark.sql(f"DROP {'VIEW' if kind == 'VIEW' else 'TABLE'} {full}")
 
 
 def _bucket_spec(design: TableDesign):
@@ -128,41 +145,90 @@ def _bucket_spec(design: TableDesign):
     return list(spec["columns"]), int(spec["buckets"])
 
 
-def _columns_ddl(design: TableDesign) -> str:
-    return ", ".join(
-        f"{c.name} {c.spark_type().simpleString()}" for c in design.unskipped_columns
-    )
+def _has_layout(design: TableDesign) -> bool:
+    """Bucketed or partitioned: the registration declares the layout."""
+    return bool(_bucket_spec(design) or design.attributes.get("partition_by"))
 
 
-def _register_partitioned_table(
-    ctx: LoadContext, db: str, rel: Relation, location: str
+def _register(
+    ctx: LoadContext,
+    db: str,
+    table: str,
+    location: str,
+    design: Optional[TableDesign] = None,
 ) -> None:
-    """Register a hive-style partitioned external table and recover its
-    partitions — downstream filters on the partition column prune at the
-    directory level (PartitionFilters in the scan)."""
-    part_cols = list(rel.design.attributes.get("partition_by") or [])
-    full = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-    ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
+    """(Re)register ``db.table`` as an external parquet table at ``location``.
+
+    Without a design layout the schema comes from the files.  A bucketed
+    design declares its columns and ``CLUSTERED BY ... INTO N BUCKETS`` so
+    co-located joins stay shuffle-free; a partitioned one declares
+    ``PARTITIONED BY`` and recovers the partitions, so filters on the
+    partition column prune at the directory level (PartitionFilters).
+    """
+    full = f"{_quote(db)}.{_quote(table)}"
+    columns = layout = ""
+    part_cols: List[str] = []
+    if design is not None and _has_layout(design):
+        columns = "(" + ", ".join(
+            f"{c.name} {c.spark_type().simpleString()}"
+            for c in design.unskipped_columns
+        ) + ") "
+        bucket = _bucket_spec(design)
+        if bucket:
+            keys = ", ".join(bucket[0])
+            layout = (
+                f"CLUSTERED BY ({keys}) SORTED BY ({keys}) INTO {bucket[1]} BUCKETS "
+            )
+        else:
+            part_cols = list(design.attributes["partition_by"])
+            layout = f"PARTITIONED BY ({', '.join(part_cols)}) "
+    _drop_relation(ctx, db, table)
     ctx.spark.sql(
-        f"CREATE TABLE {full} ({_columns_ddl(rel.design)}) USING parquet "
-        f"PARTITIONED BY ({', '.join(part_cols)}) LOCATION '{location}'"
+        f"CREATE TABLE {full} {columns}USING parquet {layout}LOCATION '{location}'"
     )
-    ctx.spark.sql(f"ALTER TABLE {full} RECOVER PARTITIONS")
+    if part_cols:
+        ctx.spark.sql(f"ALTER TABLE {full} RECOVER PARTITIONS")
 
 
-def _register_bucketed_table(
-    ctx: LoadContext, db: str, rel: Relation, location: str
-) -> None:
-    """Re-register a bucketed table at a location, preserving the bucket spec
-    (CLUSTERED BY ... INTO N BUCKETS) so co-located joins stay shuffle-free."""
-    cols, buckets = _bucket_spec(rel.design)
-    full = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-    ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
-    ctx.spark.sql(
-        f"CREATE TABLE {full} ({_columns_ddl(rel.design)}) USING parquet "
-        f"CLUSTERED BY ({', '.join(cols)}) SORTED BY ({', '.join(cols)}) "
-        f"INTO {buckets} BUCKETS LOCATION '{location}'"
-    )
+def _clone_registration(ctx: LoadContext, src: str, db: str, table: str) -> None:
+    """Register ``db.table`` with the DDL the table ``src`` was created with.
+
+    The catalog analog of the reference's schema rename: ``SHOW CREATE
+    TABLE`` carries location, columns, bucket spec and partitioning over
+    exactly as registered, whatever the design says now (re-deriving the
+    layout from a design changed since could declare 16 buckets over
+    8-bucket files).  Every check runs before ``db.table`` is dropped; a
+    source that cannot be introspected raises ETLRuntimeError.
+    """
+    try:
+        ddl = ctx.spark.sql(f"SHOW CREATE TABLE {src}").collect()[0][0]
+        # partitioned-ness from catalog metadata, not a substring scan of
+        # the DDL (which a column COMMENT could fake); DESCRIBE rather than
+        # catalog.listColumns, which runs Spark jobs
+        partitioned = any(
+            r["col_name"] == "# Partition Information"
+            for r in ctx.spark.sql(f"DESCRIBE TABLE {src}").collect()
+        )
+    except Exception as exc:
+        raise ETLRuntimeError(f"{src} is not introspectable: {exc}") from exc
+    name_match = re.match(r"CREATE TABLE\s+(\S+)", ddl)
+    if not name_match:
+        raise ETLRuntimeError(f"{src}: DDL not recognized")
+    full = f"{_quote(db)}.{_quote(table)}"
+    _drop_relation(ctx, db, table)
+    ctx.spark.sql(ddl.replace(name_match.group(1), full, 1))
+    if partitioned:
+        ctx.spark.sql(f"ALTER TABLE {full} RECOVER PARTITIONS")
+
+
+def _create_view(ctx: LoadContext, db: str, table: str, query: str) -> None:
+    """``CREATE OR REPLACE VIEW db.table``.  Only a table of the same name
+    is dropped first, so a view whose query fails keeps its previous
+    version."""
+    full = f"{_quote(db)}.{_quote(table)}"
+    if _table_type(ctx.spark, full) not in (None, "VIEW"):
+        _drop_relation(ctx, db, table)
+    ctx.spark.sql(f"CREATE OR REPLACE VIEW {full} AS {query}")
 
 
 def _bloom_options(design) -> dict:
@@ -208,8 +274,6 @@ def _analyze_relation(ctx: "LoadContext", schema: str, table: str, design) -> No
     is a full-table read per refresh for stats mostly nothing consumes.
     Measured effect: scripts/cbo_reorder_ab.py (SCALE.md round 9).
     """
-    if not ctx.analyze:
-        return
     full = f"{_quote(schema)}.{_quote(table)}"
     ctx.spark.sql(f"ANALYZE TABLE {full} COMPUTE STATISTICS")
     cols = design.attributes.get("stats_columns") or []
@@ -308,11 +372,7 @@ def materialize_dataframe(ctx: LoadContext, rel: Relation, df: DataFrame, db: st
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(location)
-    _drop_relation(ctx, db, rel.table_name.table)
-    if part_cols:
-        _register_partitioned_table(ctx, db, rel, location)
-    else:
-        _register_external_table(ctx, db, rel.table_name.table, location)
+    _register(ctx, db, rel.table_name.table, location, rel.design)
     # stats feed Catalyst's CBO (broadcast decisions, join reordering)
     _analyze_relation(ctx, db, rel.table_name.table, rel.design)
     return ctx.spark.read.parquet(location).count()
@@ -374,11 +434,7 @@ def build_external_relation(ctx: LoadContext, rel: Relation, db: str) -> int:
                 "external data is registered in place, so a type mismatch "
                 "is an error, not a cast"
             )
-    _drop_relation(ctx, db, rel.table_name.table)
-    if rel.design.attributes.get("partition_by"):
-        _register_partitioned_table(ctx, db, rel, location)
-    else:
-        _register_external_table(ctx, db, rel.table_name.table, location)
+    _register(ctx, db, rel.table_name.table, location, rel.design)
     _analyze_relation(ctx, db, rel.table_name.table, rel.design)
     return ctx.spark.table(f"{_quote(db)}.{_quote(rel.table_name.table)}").count()
 
@@ -427,7 +483,7 @@ def attach_external_schema(
     create_schema(ctx.spark, schema)
     attached: List[str] = []
     for name, path in readable:
-        _register_external_table(ctx, schema, name, path)
+        _register(ctx, schema, name, path)
         attached.append(f"{schema}.{name}")
     return attached
 
@@ -439,11 +495,8 @@ def build_transformation(
     query = rewrite_redshift_sql(rel.sql())
     staged_query = rewrite_query_for_staging(query, staging_identifiers)
     if rel.is_view_relation:
-        full = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-        ctx.spark.sql(f"DROP VIEW IF EXISTS {full}")
-        ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
-        ctx.spark.sql(f"CREATE VIEW {full} AS {staged_query}")
-        return ctx.spark.table(full).count()
+        _create_view(ctx, db, rel.table_name.table, staged_query)
+        return ctx.spark.table(f"{_quote(db)}.{_quote(rel.table_name.table)}").count()
     df = ctx.spark.sql(staged_query)
     if rel.skip_copy or ctx.skip_copy:
         df = df.limit(0)
@@ -496,6 +549,18 @@ def build_one_relation(
         return n
 
 
+def _build_in_pool(
+    ctx: LoadContext, rel: Relation, use_staging: bool, staging_ids: Sequence[str]
+) -> int:
+    """One build on a pool thread (parallel sources, percolator): the same
+    broadcast-debris exposure as the sequential loop in :func:`_build_all`,
+    on the shared driver heap, so heap hygiene runs first — single-flight,
+    so the pool's threads never stack stop-the-world GCs for the same
+    debris."""
+    ensure_heap_headroom(ctx.spark, single_flight=True)
+    return build_one_relation(ctx, rel, use_staging, staging_ids)
+
+
 def _build_all(
     ctx: LoadContext, relations: Sequence[Relation], use_staging: bool
 ) -> List[Relation]:
@@ -524,11 +589,7 @@ def _build_all(
 
     def load_source(rel: Relation) -> None:
         try:
-            # same broadcast-debris exposure as the sequential loop below,
-            # shared driver heap; single-flight so the pool's threads never
-            # stack stop-the-world GCs for the same debris
-            ensure_heap_headroom(ctx.spark, single_flight=True)
-            build_one_relation(ctx, rel, use_staging, staging_ids)
+            _build_in_pool(ctx, rel, use_staging, staging_ids)
         except Exception as exc:
             logger.error("source %s failed: %s", rel.identifier, exc)
             rel.failure_exc = exc  # type: ignore[attr-defined]
@@ -561,66 +622,41 @@ def _build_all(
 
 
 def publish(ctx: LoadContext, relations: Sequence[Relation]) -> None:
-    """Blue-green publish: back up current tables, re-register staging ones.
+    """Blue-green publish: back up current tables, promote the staged ones.
 
-    Metadata-only: production tables are re-pointed at the staged locations.
+    Metadata-only, like the reference's schema renames: each production
+    table's registration is cloned into the backup database, then each
+    staged registration into production, so location, bucket spec and
+    partitions carry over as registered.  Views are recreated last.
     """
     schemas = sorted({r.table_name.schema for r in relations})
     for schema in schemas:
         create_schema(ctx.spark, schema)
         create_schema(ctx.spark, as_backup(schema))
-    # back up current production registrations
+    # back up current production tables (a view has no data to keep)
     for rel in relations:
         tn = rel.table_name
         prod = f"{_quote(tn.schema)}.{_quote(tn.table)}"
-        if ctx.spark.catalog.tableExists(prod):
-            try:
-                loc = (
-                    ctx.spark.sql(f"DESCRIBE FORMATTED {prod}")
-                    .filter("col_name = 'Location'")
-                    .collect()
-                )
-                if loc:
-                    _register_external_table(
-                        ctx, as_backup(tn.schema), tn.table, loc[0]["data_type"]
-                    )
-            except Exception:  # views or tables without location
-                pass
+        if _table_type(ctx.spark, prod) not in (None, "VIEW"):
+            _clone_registration(ctx, prod, as_backup(tn.schema), tn.table)
     # re-point production at staging; views are recreated last so their
     # queries resolve against the already-published production tables
     tables = [r for r in relations if not r.is_view_relation]
     views = [r for r in relations if r.is_view_relation]
     for rel in tables:
         tn = rel.table_name
-        staging_db = as_staging(tn.schema)
-        staged = f"{_quote(staging_db)}.{_quote(tn.table)}"
+        staged = f"{_quote(as_staging(tn.schema))}.{_quote(tn.table)}"
         if not ctx.spark.catalog.tableExists(staged):
             logger.warning("%s missing from staging (failed build); keeping previous", rel.identifier)
             continue
-        loc = (
-            ctx.spark.sql(f"DESCRIBE FORMATTED {staged}")
-            .filter("col_name = 'Location'")
-            .collect()
-        )
-        location = loc[0]["data_type"]
-        _drop_relation(ctx, tn.schema, tn.table)
-        if _bucket_spec(rel.design):
-            _register_bucketed_table(ctx, tn.schema, rel, location)
-        elif rel.design.attributes.get("partition_by"):
-            _register_partitioned_table(ctx, tn.schema, rel, location)
-        else:
-            _register_external_table(ctx, tn.schema, tn.table, location)
+        _clone_registration(ctx, staged, tn.schema, tn.table)
         # re-registration discards staging stats; recompute on the
         # production name so the CBO sees sizes
         _analyze_relation(ctx, tn.schema, tn.table, rel.design)
     for rel in views:
         tn = rel.table_name
-        full = f"{_quote(tn.schema)}.{_quote(tn.table)}"
-        ctx.spark.sql(f"DROP VIEW IF EXISTS {full}")
-        ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
         try:
-            query = rewrite_redshift_sql(rel.sql())
-            ctx.spark.sql(f"CREATE VIEW {full} AS {query}")
+            _create_view(ctx, tn.schema, tn.table, rewrite_redshift_sql(rel.sql()))
         except Exception as exc:
             logger.warning("view %s not published: %s", rel.identifier, exc)
     # drop staging
@@ -970,7 +1006,7 @@ def compact_table(
 
     db = db or rel.table_name.schema
     fq = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-    if _bucket_spec(rel.design) or rel.design.attributes.get("partition_by"):
+    if _has_layout(rel.design):
         return (0, 0)
     if precomputed_listing is not None:
         # maintenance already listed the table for its threshold probe —
@@ -978,12 +1014,7 @@ def compact_table(
         # walk is the single most expensive step, so reuse it
         location, files, total_bytes = precomputed_listing
     else:
-        loc_rows = (
-            ctx.spark.sql(f"DESCRIBE FORMATTED {fq}")
-            .filter("col_name = 'Location'")
-            .collect()
-        )
-        location = loc_rows[0]["data_type"].replace("file:", "")
+        location = table_location(ctx.spark, fq)
         files, total_bytes = _parquet_listing(location)
     n_target = max(1, math.ceil(total_bytes / target_file_bytes))
     if len(files) <= n_target:
@@ -1009,17 +1040,8 @@ def compact_table(
             f"compaction checksum mismatch for {rel.identifier}: "
             f"{before} -> {after}; original left registered"
         )
-    _drop_relation(ctx, db, rel.table_name.table)
-    _register_external_table(ctx, db, rel.table_name.table, new_location)
-    n_after = len(
-        [
-            f
-            for _, _, names in os.walk(new_location)
-            for f in names
-            if f.endswith(".parquet")
-        ]
-    )
-    return (len(files), n_after)
+    _register(ctx, db, rel.table_name.table, new_location)
+    return (len(files), len(_parquet_listing(new_location)[0]))
 
 
 # --- lake maintenance policy (round 8) -------------------------------------
@@ -1053,15 +1075,10 @@ def fragmentation_report(
 
     db = db or rel.table_name.schema
     fq = f"{_quote(db)}.{_quote(rel.table_name.table)}"
-    if _bucket_spec(rel.design) or rel.design.attributes.get("partition_by"):
+    if _has_layout(rel.design):
         return {"files": 0, "bytes": 0, "target_files": 0,
                 "fragmented": False, "exempt": True}
-    loc_rows = (
-        ctx.spark.sql(f"DESCRIBE FORMATTED {fq}")
-        .filter("col_name = 'Location'")
-        .collect()
-    )
-    location = loc_rows[0]["data_type"].replace("file:", "")
+    location = table_location(ctx.spark, fq)
     files, total = _parquet_listing(location)
     target = max(1, math.ceil(total / target_file_bytes))
     rep = {
@@ -1163,21 +1180,14 @@ def restore_schemas(
     Reference parity: ``promote_schemas --from backup`` / ``restore_schemas``
     (commands.py:1461-1474 → data_warehouse.py:185-194), where the inverse of
     publish is an ALTER SCHEMA RENAME of the backup into the standard
-    position.  Here publish keeps the previous production registrations in
-    ``etl_backup__<schema>`` databases (metadata only — the blue-green data
-    versions both stay on disk until vacuum), so restore walks the BACKUP
-    database's actual tables — not the design list, which may have changed
-    since the bad publish — and clones each backup registration's OWN DDL
-    (``SHOW CREATE TABLE``) into the production position: location, bucket
-    spec, and partitioning are exactly what the backup was registered with,
-    immune to design drift since the bad publish (re-deriving the physical
-    spec from the CURRENT design could declare 16 buckets over 8-bucket
-    files).  Views over a restored schema are recreated from their design
-    SQL so they resolve against the restored tables — only for schemas
-    where something was actually restored, so a no-op restore reports
-    nothing instead of churning production views.  The consumed backup
-    registrations are dropped (the rename semantics: a backup restores
-    ONCE); returns the restored identifiers.
+    position.  Restore walks the ``etl_backup__<schema>`` databases' actual
+    tables — not the design list, which may have changed since the bad
+    publish — and clones each backup's own registration into production
+    (:func:`_clone_registration`: location, bucket spec and partitions as
+    backed up).  Views of a schema where something was restored are
+    recreated from their design SQL, so a no-op restore reports nothing.
+    A backup restores once: the consumed registrations are dropped.
+    Returns the restored identifiers.
     """
     selector = selector or TableSelector([])
     schemas = sorted(
@@ -1204,46 +1214,19 @@ def restore_schemas(
             continue
         create_schema(ctx.spark, schema)
         for table in sorted(backup_tables):
-            ident = f"{schema}.{table}"
             if not selector.match(TableName(schema, table)):
                 continue
-            backup_full = f"{_quote(backup_db)}.{_quote(table)}"
             try:
+                _clone_registration(
+                    ctx, f"{_quote(backup_db)}.{_quote(table)}", schema, table
+                )
+            except ETLRuntimeError as exc:
                 # a backup entry that cannot be introspected (hive-serde
                 # table, corrupt metadata) must not abort the whole restore
-                # mid-loop — warn and move on, like the rest of the walk
-                ddl = ctx.spark.sql(
-                    f"SHOW CREATE TABLE {backup_full}"
-                ).collect()[0][0]
-                # partitioned-ness from catalog metadata, not a substring
-                # scan of the DDL (which a column COMMENT could fake)
-                partitioned = any(
-                    c.isPartition
-                    for c in ctx.spark.catalog.listColumns(
-                        f"{backup_db}.{table}"
-                    )
-                )
-            except Exception as exc:  # noqa: BLE001 - skip, don't abort
-                logger.warning(
-                    "backup %s.%s not introspectable (%s); skipped",
-                    backup_db,
-                    table,
-                    exc,
-                )
+                logger.warning("backup %s.%s skipped: %s", backup_db, table, exc)
                 continue
-            name_match = re.match(r"CREATE TABLE\s+(\S+)", ddl)
-            if not name_match:
-                logger.warning(
-                    "backup %s.%s DDL not recognized; skipped", backup_db, table
-                )
-                continue
-            _drop_relation(ctx, schema, table)
-            prod_full = f"{_quote(schema)}.{_quote(table)}"
-            ctx.spark.sql(ddl.replace(name_match.group(1), prod_full, 1))
-            if partitioned:
-                ctx.spark.sql(f"ALTER TABLE {prod_full} RECOVER PARTITIONS")
-            ctx.spark.sql(f"DROP TABLE IF EXISTS {backup_full}")
-            restored.append(ident)
+            _drop_relation(ctx, backup_db, table)
+            restored.append(f"{schema}.{table}")
             restored_schemas.add(schema)
         if not any(
             not t.isTemporary for t in ctx.spark.catalog.listTables(backup_db)
@@ -1257,12 +1240,8 @@ def restore_schemas(
         tn = rel.table_name
         if tn.schema not in restored_schemas or not selector.match(tn):
             continue
-        full = f"{_quote(tn.schema)}.{_quote(tn.table)}"
-        ctx.spark.sql(f"DROP VIEW IF EXISTS {full}")
-        ctx.spark.sql(f"DROP TABLE IF EXISTS {full}")
         try:
-            query = rewrite_redshift_sql(rel.sql())
-            ctx.spark.sql(f"CREATE VIEW {full} AS {query}")
+            _create_view(ctx, tn.schema, tn.table, rewrite_redshift_sql(rel.sql()))
             restored.append(rel.identifier)
         except Exception as exc:
             logger.warning("view %s not restored: %s", rel.identifier, exc)
@@ -1284,17 +1263,11 @@ def vacuum_lake(spark: SparkSession, data_root: str) -> List[str]:
     for db_row in spark.sql("SHOW DATABASES").collect():
         db = db_row["namespace"]
         for t in spark.catalog.listTables(db):
-            try:
-                loc_rows = (
-                    spark.sql(f"DESCRIBE FORMATTED `{db}`.`{t.name}`")
-                    .filter("col_name = 'Location'")
-                    .collect()
-                )
-                if loc_rows:
-                    loc = loc_rows[0]["data_type"]
-                    referenced.add(loc.replace("file:", ""))
-            except Exception:
+            # views have no location; a table whose location cannot be
+            # read raises, as skipping it would vacuum data it still serves
+            if t.isTemporary or t.tableType == "VIEW":
                 continue
+            referenced.add(table_location(spark, f"{_quote(db)}.{_quote(t.name)}"))
     removed = []
     if not os.path.isdir(data_root):
         return removed
@@ -1326,16 +1299,10 @@ def table_versions(ctx: LoadContext, rel: Relation) -> List[dict]:
     import os
 
     tn = rel.table_name
-    current = None
     full = f"{_quote(tn.schema)}.{_quote(tn.table)}"
-    if ctx.spark.catalog.tableExists(full):
-        loc_rows = (
-            ctx.spark.sql(f"DESCRIBE FORMATTED {full}")
-            .filter("col_name = 'Location'")
-            .collect()
-        )
-        if loc_rows:
-            current = loc_rows[0]["data_type"].replace("file:", "")
+    current = (
+        table_location(ctx.spark, full) if ctx.spark.catalog.tableExists(full) else None
+    )
     out: List[dict] = []
     if not os.path.isdir(ctx.data_root):
         return out
@@ -1393,8 +1360,6 @@ def rollback_table(ctx: LoadContext, rel: Relation, etl_id: str) -> dict:
     (it is referenced again) and the abandoned newer version becomes
     collectible — the two verbs compose into undo + cleanup.
     """
-    import os
-
     versions = table_versions(ctx, rel)
     target = next((v for v in versions if v["etl_id"] == etl_id), None)
     if target is None:
@@ -1413,10 +1378,7 @@ def rollback_table(ctx: LoadContext, rel: Relation, etl_id: str) -> dict:
     df = ctx.spark.read.parquet(location)
     n_rows = df.count()  # readability + the post-rollback audit number
     tn = rel.table_name
-    declares_columns = bool(
-        _bucket_spec(rel.design) or rel.design.attributes.get("partition_by")
-    )
-    if declares_columns:
+    if _has_layout(rel.design):
         have_cols = set(df.columns)
         part_cols = list(rel.design.attributes.get("partition_by") or [])
         # partition columns live in directory names, not the files
@@ -1431,13 +1393,7 @@ def rollback_table(ctx: LoadContext, rel: Relation, etl_id: str) -> dict:
                 f"design columns {missing} absent from the version's files "
                 "(schema drift; the current design no longer matches)"
             )
-    _drop_relation(ctx, tn.schema, tn.table)
-    if _bucket_spec(rel.design):
-        _register_bucketed_table(ctx, tn.schema, rel, location)
-    elif rel.design.attributes.get("partition_by"):
-        _register_partitioned_table(ctx, tn.schema, rel, location)
-    else:
-        _register_external_table(ctx, tn.schema, tn.table, location)
+    _register(ctx, tn.schema, tn.table, location, rel.design)
     _analyze_relation(ctx, tn.schema, tn.table, rel.design)
     with Monitor(
         ctx.store, rel.identifier, STEP_MAINTAIN, etl_id=ctx.etl_id
@@ -1450,13 +1406,6 @@ def rollback_table(ctx: LoadContext, rel: Relation, etl_id: str) -> dict:
         "location": location,
         "rows": n_rows,
     }
-
-
-def _build_with_heap_check(ctx: LoadContext, rel: Relation, staging_ids) -> int:
-    """Percolator build unit: heap hygiene (single-flight — the pool's
-    threads share one driver heap) then the staged build."""
-    ensure_heap_headroom(ctx.spark, single_flight=True)
-    return build_one_relation(ctx, rel, True, staging_ids)
 
 
 def load_sources_as_extracted(
@@ -1509,7 +1458,7 @@ def load_sources_as_extracted(
                         skipped,
                     )
                 futures[ident] = pool.submit(
-                    _build_with_heap_check, ctx, rel, staging_ids
+                    _build_in_pool, ctx, rel, True, staging_ids
                 )
             for ident, fut in list(futures.items()):
                 if fut.done():

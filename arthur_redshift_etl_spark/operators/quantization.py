@@ -240,9 +240,7 @@ def pq_encode_arrow(
       expression form's lexicographic ``array_min`` over (d, cid) structs.
 
     Parity is pinned by test + scripts/pq_encode_arrow_ab.py (multiset
-    equality at enlarged scale).  Break-even caveat (r13 sizing note): the
-    Arrow stage's fixed cost exceeds the expression cost at bench-scale
-    corpora (~2k rows); this path is for corpus-scale encode jobs.
+    equality at enlarged scale).
     """
     import numpy as np
 

@@ -168,8 +168,10 @@ def test_loader_wires_hygiene_into_parallel_and_percolator_paths():
     from arthur_redshift_etl_spark import loader
 
     src = inspect.getsource(loader._build_all)
-    # the parallel source closure, not just the sequential transform loop
-    assert src.count("ensure_heap_headroom") >= 2
-    assert "single_flight=True" in src
-    perc = inspect.getsource(loader._build_with_heap_check)
-    assert "ensure_heap_headroom" in perc and "single_flight=True" in perc
+    # the sequential transform loop guards itself; the parallel source
+    # closure and the percolator share the pooled build step
+    assert "ensure_heap_headroom" in src and "_build_in_pool" in src
+    perc = inspect.getsource(loader.load_sources_as_extracted)
+    assert "_build_in_pool" in perc
+    pooled = inspect.getsource(loader._build_in_pool)
+    assert "ensure_heap_headroom" in pooled and "single_flight=True" in pooled

@@ -47,22 +47,56 @@ def clean_dbs(spark):
 
 
 def test_vacuum_removes_only_unreferenced(spark, tmp_path, clean_dbs):
+    from arthur_redshift_etl_spark.loader import table_location
+    from arthur_redshift_etl_spark.names import TableName
+
+    def relations():
+        # one table per registration layout, plus a view (no location)
+        plain = source_rel(spark, tmp_path, "vsrc.nation", "nation")
+        parted = source_rel(spark, tmp_path, "vsrc.nation_p", "nation")
+        parted.design.attributes["partition_by"] = ["n_name"]
+        bucketed = source_rel(spark, tmp_path, "vsrc.nation_b", "nation")
+        bucketed.design.attributes["bucket_by"] = {
+            "columns": ["n_nationkey"], "buckets": 2
+        }
+        # its column named Location must not read as a storage location
+        view = Relation(
+            design=TableDesign(
+                name="vsrc.v_nation",
+                source_name="VIEW",
+                columns=[ColumnDefinition("Location")],
+                depends_on=["vsrc.nation"],
+            ),
+            query="SELECT n_name AS Location FROM vsrc.nation",
+        )
+        return [plain, parted, bucketed, view]
+
     lake = str(tmp_path / "lake")
-    rels = [source_rel(spark, tmp_path, "vsrc.nation", "nation")]
     ctx1 = LoadContext(spark=spark, data_root=lake, store=EventStore())
-    load_warehouse(ctx1, rels)
+    load_warehouse(ctx1, relations())
     for _ in range(2):
-        rels_n = [source_rel(spark, tmp_path, "vsrc.nation", "nation")]
         load_warehouse(
-            ctx := LoadContext(spark=spark, data_root=lake, store=EventStore()), rels_n
+            ctx := LoadContext(spark=spark, data_root=lake, store=EventStore()),
+            relations(),
         )
     assert len(os.listdir(lake)) == 3
+    # table_location: the registered path without its file: scheme, for
+    # every layout; None for a view
+    for table in ("nation", "nation_p", "nation_b"):
+        loc = table_location(spark, f"vsrc.{table}")
+        assert not loc.startswith("file:")
+        assert os.path.normpath(loc) == os.path.normpath(
+            ctx.table_location(TableName("vsrc", table))
+        )
+    assert table_location(spark, "vsrc.v_nation") is None
     # production references the 3rd version, the backup db the 2nd;
     # only the 1st is unreferenced
     removed = vacuum_lake(spark, lake)
     assert [os.path.basename(p) for p in removed] == [ctx1.etl_id]
-    # survivor still queryable
+    # survivors still queryable
     assert spark.table("vsrc.nation").count() > 0
+    assert spark.table("vsrc.nation_p").count() > 0
+    assert spark.table("vsrc.v_nation").count() > 0
 
 
 def test_percolator_loads_in_event_order(spark, tmp_path, clean_dbs):
@@ -1182,3 +1216,78 @@ def test_rollback_refuses_schema_drift_for_declared_layouts(
     # partition column still prunes (registered PARTITIONED BY)
     info = rollback_table(ctx2, rel_with_cols(base_cols), ctx1.etl_id)
     assert info["rows"] == spark.table("drift.nation").count()
+
+
+def test_restore_keeps_bucket_spec(spark, tmp_path, clean_dbs):
+    """publish backs a bucketed table up with its own registration, so a
+    restore brings back the bucket spec, and a join on the bucket key
+    still plans no shuffle."""
+    from arthur_redshift_etl_spark.bootstrap import bootstrap_source_design
+    from arthur_redshift_etl_spark.loader import restore_schemas
+    from arthur_redshift_etl_spark.plans.lint import plan_text
+
+    d = str(tmp_path / "data" / "rbk.orders")
+    spark.read.parquet(f"{SF_DIR}/orders.parquet").write.mode("overwrite").parquet(d)
+
+    def rel():
+        design = bootstrap_source_design(
+            spark.read.parquet(d), "rbk.orders", "up.public.orders"
+        )
+        design.attributes["bucket_by"] = {"columns": ["o_orderkey"], "buckets": 4}
+        return Relation(design=design, data_location=d)
+
+    lake = str(tmp_path / "lake")
+    ctxs = [LoadContext(spark=spark, data_root=lake, store=EventStore()) for _ in range(2)]
+    for ctx in ctxs:
+        load_warehouse(ctx, [rel()])
+    assert restore_schemas(ctxs[1], [rel()]) == ["rbk.orders"]
+    detail = {
+        r["col_name"]: r["data_type"]
+        for r in spark.sql("DESCRIBE FORMATTED rbk.orders").collect()
+    }
+    assert detail.get("Num Buckets") == "4"
+    # restored to the first load's files
+    assert os.path.normpath(detail["Location"].replace("file:", "")) == os.path.normpath(
+        f"{lake}/{ctxs[0].etl_id}/rbk/orders"
+    )
+    orders = spark.table("rbk.orders")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        joined = orders.alias("a").join(orders.alias("b"), "o_orderkey")
+        assert "Exchange" not in plan_text(joined), "restored bucketed join shuffles"
+        assert joined.count() == orders.count()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+@pytest.mark.parametrize(
+    "kinds", [("CTAS", "VIEW"), ("VIEW", "CTAS")], ids=["table_to_view", "view_to_table"]
+)
+def test_relation_changes_between_table_and_view(spark, tmp_path, clean_dbs, kinds):
+    """A design that turns a CTAS into a VIEW, or back, publishes the new
+    kind: Spark refuses DROP TABLE on a view and DROP VIEW on a table, so the
+    loader must drop by catalog type."""
+    lake = str(tmp_path / "lake")
+    for kind in kinds:
+        x = Relation(
+            design=TableDesign(
+                name="dw.x",
+                source_name=kind,
+                columns=[
+                    ColumnDefinition("n_nationkey", "int"),
+                    ColumnDefinition("n_name", "string"),
+                ],
+                depends_on=["tvsrc.nation"],
+            ),
+            query="SELECT n_nationkey, n_name FROM tvsrc.nation",
+        )
+        load_warehouse(
+            LoadContext(spark=spark, data_root=lake, store=EventStore()),
+            [source_rel(spark, tmp_path, "tvsrc.nation", "nation"), x],
+        )
+        expected = "VIEW" if kind == "VIEW" else "EXTERNAL"
+        assert spark.catalog.getTable("dw.x").tableType == expected
+        assert spark.table("dw.x").count() == spark.table("tvsrc.nation").count()
+        dbs = {r.namespace for r in spark.sql("SHOW DATABASES").collect()}
+        assert not any(db.startswith("etl_staging__") for db in dbs)
