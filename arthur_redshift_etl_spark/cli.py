@@ -252,8 +252,13 @@ def cmd_extract(args) -> int:
     --duckdb-path / --sqlite-path, RUN it against that upstream and land
     parquet under --output-dir/<schema>/<table> (the reference's
     `arthur.py extract` writ small: plan, pull partition-parallel,
-    write — one plan, any transport)."""
-    from .sources.jdbc import plan_extract
+    write — one plan, any transport).
+
+    With an upstream, each plan is sized from the upstream's probed size
+    of the extract (or delta) query: partitions by the multiple-of-4
+    heuristic, and --use-sampling applies only above 100 MiB.  The dry
+    plan has nothing to probe and assumes the reference's 640 MiB."""
+    from .sources.jdbc import FALLBACK_TABLE_SIZE, plan_extract, select_statement
 
     spark = source = None
     upstream = args.duckdb_path or args.sqlite_path
@@ -270,11 +275,16 @@ def cmd_extract(args) -> int:
             return 2
         spark = _spark(args)
 
+    def size(query: str) -> int:
+        if source is None:
+            return FALLBACK_TABLE_SIZE
+        return source.size_bytes(upstream, query)
+
     for rel in _relations(args, args.patterns):
         if not rel.is_source_relation:
             continue
         if getattr(args, "incremental_column", None):
-            from .sources.jdbc import plan_incremental_extract
+            from .sources.jdbc import incremental_statement, plan_incremental_extract
 
             if args.last_seen is None:
                 print(
@@ -315,11 +325,16 @@ def cmd_extract(args) -> int:
                             mark = float(mark)
                     except ValueError:
                         pass  # temporal/string mark stays a string
+            delta = incremental_statement(rel.design, args.incremental_column, mark)
             plan = plan_incremental_extract(
-                rel.design, args.incremental_column, mark
+                rel.design, args.incremental_column, mark, size(delta)
             )
         else:
-            plan = plan_extract(rel.design, use_sampling=args.use_sampling)
+            plan = plan_extract(
+                rel.design,
+                size(select_statement(rel.design)),
+                use_sampling=args.use_sampling,
+            )
         row = {
             "relation": rel.identifier,
             "query": plan.query,
@@ -1342,7 +1357,10 @@ def build_parser() -> argparse.ArgumentParser:
                     help="parquet path holding the request keys")
     sp.add_argument("--key", required=True, help="key column to scrub on")
     sp = add("extract", cmd_extract)
-    sp.add_argument("--use-sampling", action="store_true")
+    sp.add_argument("--use-sampling", action="store_true",
+                    help="extract 10%% of rows (MOD(key, 10) = 1) from "
+                         "tables whose probed size is over 100 MiB; the "
+                         "dry plan assumes 640 MiB")
     sp.add_argument("--incremental-column",
                     help="watermark column for delta-only extract")
     sp.add_argument("--last-seen",

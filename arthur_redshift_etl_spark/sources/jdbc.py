@@ -32,7 +32,10 @@ MIN_PARTITION_BYTES = 10 * 1024 * 1024  # 10 MiB (database_extractor.py:42-53)
 MIN_PARTITION_BYTES_SAMPLED = 100 * 1024 * 1024
 DEFAULT_MAX_PARTITIONS = 32  # default_settings.yaml:70
 SAMPLING_THRESHOLD_BYTES = 100 * 1024 * 1024
-FALLBACK_TABLE_SIZE = 671_088_640  # database_extractor.py size-probe fallback
+# database_extractor.py's size when its probe is unavailable; used here
+# only when no upstream can be probed (the CLI's dry plan, plain JDBC).
+# The key-range sources size every extract with KeyRangeDataSource.size_bytes.
+FALLBACK_TABLE_SIZE = 671_088_640
 
 SPLIT_KEY_TYPES = {"int", "long", "date", "timestamp"}
 
@@ -220,6 +223,15 @@ def incremental_condition(watermark_column: str, last_seen) -> str:
     return f"{watermark_column} > '{lit}'"
 
 
+def incremental_statement(design: TableDesign, watermark_column: str, last_seen) -> str:
+    """The delta query: :func:`select_statement` plus the watermark predicate."""
+    base = select_statement(design)
+    cond = incremental_condition(watermark_column, last_seen)
+    # select_statement emits "... FROM table" or "... WHERE <condition>";
+    # splice the watermark predicate accordingly
+    return f"{base} AND {cond}" if " WHERE " in base else f"{base} WHERE {cond}"
+
+
 def plan_incremental_extract(
     design: TableDesign,
     watermark_column: str,
@@ -238,16 +250,8 @@ def plan_incremental_extract(
     is the difference between moving the table and moving the day.
     """
     base = plan_extract(design, table_size_bytes, max_partitions)
-    cond = incremental_condition(watermark_column, last_seen)
-    # select_statement emits "... FROM table" or "... WHERE <condition>";
-    # splice the watermark predicate accordingly
-    query = (
-        f"{base.query} AND {cond}"
-        if " WHERE " in base.query
-        else f"{base.query} WHERE {cond}"
-    )
     return JdbcExtractPlan(
-        query=query,
+        query=incremental_statement(design, watermark_column, last_seen),
         partition_column=base.partition_column,
         num_partitions=base.num_partitions,
         boundary_query=base.boundary_query,

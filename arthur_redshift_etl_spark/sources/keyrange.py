@@ -8,7 +8,11 @@ hooks where Spark expects it:
 
 - ``partitions()``  — boundary query (the design's ``boundary_query`` when
   set, else MIN/MAX of the split column) then N half-open key ranges, one
-  Spark task each (sqoop's ``--split-by`` / ``--num-mappers``);
+  Spark task each (sqoop's ``--split-by`` / ``--num-mappers``).  N comes
+  from the design, else from ``KeyRangeDataSource.size_bytes``: the
+  extract query's row count times the Arrow bytes per row of a sample,
+  fed to the reference's multiple-of-4 heuristic (its ``pg_table_size``
+  probe), so a small table is one range and one Spark task;
 - ``pushFilters()`` — comparisons, null checks and IN lists translate to
   parameterized SQL in the per-partition query, so the upstream prunes
   before a byte crosses into Spark (the reference pushes WHERE into
@@ -52,6 +56,9 @@ from pyspark.sql.types import StructType
 # Rows per Arrow batch.  Swept at 8k/64k/512k on both engines (SCALE.md
 # "batch_rows sweep"): duckdb is flat, sqlite peaks here.
 BATCH_ROWS = 65536
+
+# Rows fetched by the size probe to measure Arrow bytes per row.
+PROBE_ROWS = 1024
 
 
 @dataclass
@@ -240,16 +247,45 @@ class KeyRangeDataSource(DataSource):
         return r.load()
 
     @classmethod
+    def size_bytes(cls, path: str, query: str) -> int:
+        """Bytes ``query`` moves: its ``COUNT(*)`` times the Arrow bytes
+        per row of its first ``PROBE_ROWS`` rows, fetched through the
+        engine's own ``_batches``.  The reference sizes each extract from
+        ``pg_table_size`` (database_extractor.py:156-190).  A query the
+        upstream cannot run raises here, as the read would; an empty
+        relation is 0 bytes.  Needs an active session, which parses the
+        schema DDL for the engine's reader."""
+        source = cls({"path": path, "query": query})
+        relation = source._relation_sql()
+        con = cls.reader_class.connect(path)
+        try:
+            (rows,) = con.execute(f"SELECT COUNT(*) FROM {relation}").fetchone()
+            if not rows:
+                return 0
+            reader = source.reader(StructType.fromDDL(source.schema()))
+            sample = list(
+                reader._batches(
+                    con, f"SELECT * FROM {relation} LIMIT {PROBE_ROWS}", []
+                )
+            )
+        finally:
+            con.close()
+        sampled = sum(b.num_rows for b in sample)
+        return rows * sum(b.nbytes for b in sample) // sampled
+
+    @classmethod
     def extract_design(cls, spark, design, path: str):
         """Design-driven extract through this format.
 
         The same planning the JDBC path applies to a table design
         (``sources/jdbc.plan_extract``: projection + per-column cast
         expressions, WHERE condition, split-by column, boundary query and
-        the multiple-of-4 partition-count heuristic) executed against this
-        upstream — one designs file drives every transport, the
-        reference's Sqoop promise of a database-agnostic splitter.
+        the multiple-of-4 partition-count heuristic, sized by
+        :meth:`size_bytes`) executed against this upstream — one designs
+        file drives every transport, the reference's Sqoop promise of a
+        database-agnostic splitter.
         """
-        from .jdbc import plan_extract
+        from .jdbc import plan_extract, select_statement
 
-        return cls.read_plan(spark, path, plan_extract(design))
+        size = cls.size_bytes(path, select_statement(design))
+        return cls.read_plan(spark, path, plan_extract(design, size))

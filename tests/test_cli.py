@@ -264,6 +264,75 @@ def test_extract_runs_against_duckdb_upstream(design_repo, tmp_path, capsys, spa
     assert landed.rdd.getNumPartitions() == 4  # split_by/num_partitions honored
 
 
+@pytest.fixture()
+def sized_upstream(tmp_path):
+    """(repo, duckdb path, upstream rows): an orders design with no
+    num_partitions, so the probed size plans the extract."""
+    import duckdb
+
+    root = str(tmp_path / "sized")
+    os.makedirs(root, exist_ok=True)
+    write_design(
+        root,
+        {
+            "name": "src.orders",
+            "source_name": "up.main.orders",
+            "columns": [
+                {"name": "o_orderkey", "type": "long", "not_null": True},
+                {"name": "o_totalprice", "type": "double"},
+            ],
+            "constraints": [{"primary_key": ["o_orderkey"]}],
+        },
+    )
+    db = str(tmp_path / "up.duckdb")
+    con = duckdb.connect(db)
+    con.execute(
+        "CREATE TABLE orders AS "
+        "SELECT * FROM read_parquet('/root/testdata/sf0.001/orders.parquet')"
+    )
+    n_src = con.execute("SELECT COUNT(*) FROM orders").fetchone()[0]
+    con.close()
+    return root, db, n_src
+
+
+def _extract_rows(capsys):
+    return [
+        json.loads(l)
+        for l in capsys.readouterr().out.splitlines()
+        if l.startswith("{")
+    ]
+
+
+def test_extract_use_sampling_skips_small_upstream_tables(
+    sized_upstream, tmp_path, capsys, spark
+):
+    """--use-sampling samples only tables over 100 MiB of probed size: a
+    small upstream table lands whole, as one range."""
+    root, db, n_src = sized_upstream
+    assert main([
+        "--repo", root, "extract", "--use-sampling",
+        "--duckdb-path", db, "--output-dir", str(tmp_path / "lake"),
+    ]) == 0
+    (row,) = _extract_rows(capsys)
+    assert "MOD(" not in row["query"]
+    assert row["num_partitions"] == 1
+    assert row["rows"] == n_src
+    assert spark.read.parquet(row["output"]).count() == n_src
+
+
+def test_extract_incremental_sizes_the_delta(sized_upstream, tmp_path, capsys):
+    root, db, n_src = sized_upstream
+    assert main([
+        "--repo", root, "extract", "--duckdb-path", db,
+        "--output-dir", str(tmp_path / "lake"),
+        "--incremental-column", "o_orderkey", "--last-seen", "1000",
+    ]) == 0
+    (row,) = _extract_rows(capsys)
+    assert "o_orderkey > 1000" in row["query"]
+    assert row["num_partitions"] == 1
+    assert 0 < row["rows"] < n_src
+
+
 def test_extract_duckdb_requires_output_dir(design_repo, capsys):
     assert main(["--repo", design_repo, "extract", "--duckdb-path", "/nope.db"]) == 2
     assert "--output-dir" in capsys.readouterr().err

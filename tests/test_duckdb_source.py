@@ -485,6 +485,137 @@ def test_design_boundary_query_sets_split_points(registered, duck_path, engine):
     assert sum(sizes) == len(keys)
 
 
+def _orders_design(**settings):
+    from arthur_redshift_etl_spark.design import (
+        ColumnDefinition,
+        ExtractSettings,
+        TableDesign,
+    )
+
+    return TableDesign(
+        name="dw.orders",
+        source_name="up.main.orders",
+        columns=[
+            ColumnDefinition("o_orderkey", "long", not_null=True),
+            ColumnDefinition("o_custkey", "long"),
+            ColumnDefinition("o_totalprice", "double"),
+        ],
+        constraints=[{"primary_key": ["o_orderkey"]}],
+        extract_settings=ExtractSettings(**settings),
+    )
+
+
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite"])
+def test_extract_design_sized_from_upstream(registered, duck_path, engine):
+    """With no num_partitions the probed size plans the extract: a table
+    well under 10 MiB is one range, not the 640 MiB fallback's 32."""
+    source, path = _engine(engine, duck_path)
+    df = source.extract_design(registered, _orders_design(), path)
+    assert df.rdd.getNumPartitions() == 1
+    ref = registered.read.parquet(f"{SF}/orders.parquet").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    rows = sorted(tuple(map(str, r)) for r in df.collect())
+    assert rows == sorted(tuple(map(str, r)) for r in ref.collect())
+
+
+@pytest.fixture(scope="module")
+def big_duck(tmp_path_factory):
+    """~57 MiB of Arrow in one table: 1M rows of two bigints and a 40-char
+    string, generated in DuckDB."""
+    p = str(tmp_path_factory.mktemp("bigduck") / "big.duckdb")
+    con = duckdb.connect(p)
+    con.execute(
+        "CREATE TABLE big AS SELECT i AS k, i * 2 AS v, "
+        "lpad(CAST(i AS VARCHAR), 40, 'x') AS pad FROM range(1000000) t(i)"
+    )
+    con.close()
+    return p
+
+
+def _big_design(**settings):
+    from arthur_redshift_etl_spark.design import (
+        ColumnDefinition,
+        ExtractSettings,
+        TableDesign,
+    )
+
+    return TableDesign(
+        name="dw.big",
+        source_name="up.main.big",
+        columns=[
+            ColumnDefinition("k", "long", not_null=True),
+            ColumnDefinition("v", "long"),
+            ColumnDefinition("pad", "string"),
+        ],
+        constraints=[{"primary_key": ["k"]}],
+        extract_settings=ExtractSettings(**settings),
+    )
+
+
+def test_extract_design_plans_many_ranges_for_a_large_table(registered, big_duck):
+    from arthur_redshift_etl_spark.sources.duckdb_source import DuckDBDataSource
+    from arthur_redshift_etl_spark.sources.jdbc import (
+        maximize_partitions,
+        select_statement,
+    )
+
+    design = _big_design()
+    size = DuckDBDataSource.size_bytes(big_duck, select_statement(design))
+    assert 40 << 20 < size < 80 << 20
+    assert maximize_partitions(size) > 1
+    df = DuckDBDataSource.extract_design(registered, design, big_duck)
+    assert df.rdd.getNumPartitions() == maximize_partitions(size)
+
+
+def test_extract_design_sizes_the_filtered_relation(registered, big_duck):
+    """The probe counts the design's condition: a 10% slice of the large
+    table plans fewer ranges than the whole table."""
+    from arthur_redshift_etl_spark.sources.duckdb_source import DuckDBDataSource
+
+    whole = DuckDBDataSource.extract_design(registered, _big_design(), big_duck)
+    part = DuckDBDataSource.extract_design(
+        registered, _big_design(condition="k < 100000"), big_duck
+    )
+    assert part.rdd.getNumPartitions() < whole.rdd.getNumPartitions()
+    assert part.rdd.getNumPartitions() == 1
+
+
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite"])
+def test_size_probe_raises_before_any_spark_job(registered, duck_path, engine):
+    """A query the upstream cannot run fails in the driver's probe, with
+    the engine's own error, before Spark runs a job."""
+    import sqlite3
+
+    from arthur_redshift_etl_spark.design import ColumnDefinition, TableDesign
+
+    source, path = _engine(engine, duck_path)
+    design = TableDesign(
+        name="dw.missing",
+        source_name="up.main.no_such_table",
+        columns=[ColumnDefinition("k", "long", not_null=True)],
+        constraints=[{"primary_key": ["k"]}],
+    )
+    sc = registered.sparkContext
+    sc.setJobGroup("size-probe", "probe failure")
+    try:
+        with pytest.raises((duckdb.Error, sqlite3.Error), match="no_such_table"):
+            source.extract_design(registered, design, path)
+        assert sc.statusTracker().getJobIdsForGroup("size-probe") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite"])
+def test_empty_relation_plans_one_range(registered, duck_path, engine):
+    source, path = _engine(engine, duck_path)
+    df = source.extract_design(
+        registered, _orders_design(condition="o_orderkey < 0"), path
+    )
+    assert df.rdd.getNumPartitions() == 1
+    assert df.count() == 0
+
+
 def test_change_feed_protocol_property_no_loss_no_dup(tmp_path):
     """Drive the reader protocol directly (no Spark): random interleavings
     of upstream appends and read() calls must deliver every row exactly
