@@ -155,7 +155,9 @@ def pq_subspace_distance(xm_col, codebook_vec: list, m: int, sub: int):
 def pq_code(xm_col, codebooks: dict, m: int, sub: int):
     """The m-th PQ code for a row: argmin centroid by exact distance, ties
     to the lowest centroid id (lexicographic min of (d, cid) structs — no
-    window, no shuffle; the codebook is a baked literal)."""
+    window, no shuffle; the codebook is a baked literal).  A null vector, or
+    a null component in the subspace, has a null distance, which sorts
+    first: such a row gets a null code, not the lowest centroid id."""
     best = F.array_min(
         F.array(
             *[
@@ -167,7 +169,7 @@ def pq_code(xm_col, codebooks: dict, m: int, sub: int):
             ]
         )
     )
-    return best.getField("cid")
+    return F.when(best.getField("d").isNotNull(), best.getField("cid"))
 
 
 def pq_encode_expr(
@@ -243,12 +245,15 @@ def pq_encode_arrow(
     equality at enlarged scale).
     """
     import numpy as np
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     cids = sorted(codebooks)
     cb = np.array([codebooks[c] for c in cids], dtype=np.int64)  # K x dims
     cid_arr = np.array(cids, dtype=np.int64)
-    schema = ", ".join(
-        [f"{id_col} long"] + [f"code{m} int" for m in range(n_subspaces)]
+    # the id keeps its input type (int or long), as in the expression form
+    schema = StructType(
+        [df.schema[id_col]]
+        + [StructField(f"code{m}", IntegerType()) for m in range(n_subspaces)]
     )
 
     def encode(batches):
@@ -257,17 +262,23 @@ def pq_encode_arrow(
         for pdf in batches:
             if pdf.empty:
                 continue
-            x = np.floor(
-                np.stack(pdf[vec_col].to_numpy()).astype(np.float64) * 1e6
-            ).astype(np.int64)  # n x dims
+            # micro units, exact in float64; a null component reads as NaN
+            # and a null vector as all-NaN, and either gets a null code in
+            # the subspaces it touches, as in the expression form
+            null = pdf[vec_col].isna().to_numpy()
+            xf = np.full((len(pdf), cb.shape[1]), np.nan)
+            if not null.all():
+                vecs = np.stack(pdf[vec_col].to_numpy()[~null])
+                xf[~null] = np.floor(vecs.astype(np.float64) * 1e6)
             out = {id_col: pdf[id_col].to_numpy()}
             for m in range(n_subspaces):
-                xm = x[:, m * sub_dims:(m + 1) * sub_dims]
+                sub = xf[:, m * sub_dims:(m + 1) * sub_dims]
+                missing = np.isnan(sub).any(axis=1)
+                xm = np.where(missing[:, None], 0, sub).astype(np.int64)
                 cm = cb[:, m * sub_dims:(m + 1) * sub_dims]
                 d = ((xm[:, None, :] - cm[None, :, :]) ** 2).sum(axis=2)
-                out[f"code{m}"] = cid_arr[np.argmin(d, axis=1)].astype(
-                    np.int32
-                )
+                code = cid_arr[np.argmin(d, axis=1)].astype(np.int32)
+                out[f"code{m}"] = pd.arrays.IntegerArray(code, missing)
             yield pd.DataFrame(out)
 
     return df.select(id_col, vec_col).mapInPandas(encode, schema)

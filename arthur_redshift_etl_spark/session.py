@@ -2,8 +2,8 @@
 
 Scale posture: every default here is chosen for a large cluster (AQE on,
 skew-join handling, partition coalescing, Arrow for the Pandas-UDF paths)
-while remaining correct on ``local[*]`` test runs.  Tests/bench override
-``shuffle_partitions`` to the local core count.
+while remaining correct on ``local[*]`` test runs.  Shuffle partitions
+default to :func:`default_cpus`, the local core count.
 """
 
 from __future__ import annotations
@@ -12,6 +12,19 @@ import os
 from typing import Optional
 
 from pyspark.sql import SparkSession
+
+# Whole-stage codegen classes kept per JVM.  Spark's default (100) is below
+# one star_sql pass's class set (215-225 classes at sf0.01, 4 cores), so a
+# pass evicted every class before reusing it and the warm pass recompiled
+# 179-201 of them (1.2-2.2 s).  At 1000 the traced warm pass compiles 0.
+# Static conf: only the builder that starts the JVM's first session sets it.
+CODEGEN_CACHE_ENTRIES = 1000
+
+
+def default_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def build_session(
@@ -23,7 +36,7 @@ def build_session(
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = default_cpus()
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -51,6 +64,7 @@ def build_session(
         # the full configured partition count on every downstream stage
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Arrow transfer for pandas_udf/applyInPandas paths (dedup, similarity).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

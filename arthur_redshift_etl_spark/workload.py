@@ -15,11 +15,14 @@ the exact measure with an id tiebreaker so ordering is engine-independent.
 
 from __future__ import annotations
 
+import os
+import weakref
 from dataclasses import dataclass
 from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators import dedup as dd
 from .operators import quantiles as qt
@@ -53,23 +56,54 @@ def query(name: str, oracle: Optional[str] = None, description: str = ""):
     return deco
 
 
+# Oracle parity assumes UTC timestamps and permissive (Redshift-style)
+# casts, and events.parquet carries TIMESTAMP(NANOS), which Spark's reader
+# rejects unless nanos are read as long.  t() enforces all three on its first
+# call for each session, so the driver contract's sessions (not built by
+# build_session) get them too, and no read mid-pass changes the schema key.
+_T_CONF = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.ansi.enabled", "false"),
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+)
+# session -> {(path, st_mtime_ns, st_size, nanosAsLong): inferred schema}.
+# spark.read.parquet runs one inference job per call, even for one file; a
+# read with the schema supplied runs none.  Schemas only, never DataFrames.
+_T_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, Dict[tuple, StructType]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _read_parquet(spark: SparkSession, schemas: dict, path: str) -> DataFrame:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size,
+           spark.conf.get("spark.sql.legacy.parquet.nanosAsLong"))
+    schema = schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    schemas[key] = df.schema
+    return df
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # oracle parity assumes UTC timestamps and permissive (Redshift-style)
-    # casts — enforce even when the caller's session was built elsewhere
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
+    schemas = _T_SCHEMAS.get(spark)
+    if schemas is None:
+        for k, v in _T_CONF:
+            spark.conf.set(k, v)
+        schemas = _T_SCHEMAS[spark] = {}
+    df = _read_parquet(spark, schemas, f"{sf_dir}/{name}.parquet")
     if name == "events":
-        # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
-        # reader rejects; read nanos as long and truncate to microseconds
-        # (same truncation DuckDB applies).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        # nanos were read as long: truncate to microseconds (same truncation
+        # DuckDB applies)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000").cast("long")).cast("timestamp_ntz")
             )
         return df
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name in ("documents", "embeddings"):
         # single small parquet file → one input split; the downstream
         # explode/cross pipelines are CPU-bound, so spread them across cores.
@@ -10815,7 +10849,6 @@ def _duckdb_mirror(sf_dir: str) -> str:
     mirror; the mirror file itself is unique to this process (mkstemp),
     so no stale artifact from an earlier run can be read.
     """
-    import os
     import tempfile
 
     import duckdb
@@ -10880,7 +10913,6 @@ def _duckdb_mirror(sf_dir: str) -> str:
     ),
 )
 def duckdb_source_orders_by_status(spark, sf_dir):
-    import os
     import platform
 
     import duckdb
@@ -10996,7 +11028,6 @@ _SQLITE_MIRROR_MEMO: dict = {}
 def _sqlite_mirror(sf_dir: str) -> str:
     """Per-process SQLite mirror of orders — the second-engine upstream
     double for the shared Python-DataSource extract template."""
-    import os
     import sqlite3
     import tempfile
 
@@ -12421,8 +12452,6 @@ def _trained_pq_codebooks(spark, sf_dir, m: int = None, sub: int = None, k: int 
     cache) plus the codebook geometry, so a regenerated corpus — or a
     different (M, K) — retrains.
     """
-    import os
-
     from .operators import quantization as qz
 
     m = PQ_M if m is None else m
@@ -14702,7 +14731,6 @@ _VINDEX_MEMO: dict = {}
 
 
 def _vindex_dir(spark, sf_dir: str) -> str:
-    import os
     import tempfile
 
     from . import vector_index as vi

@@ -3,7 +3,8 @@
 
 Env:
   SPARK_GRAFT_SF_DIR   data dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local cores / shuffle partitions (default 32)
+  SPARK_GRAFT_CPUS     local cores / shuffle partitions (default: the cores
+                       this process may run on, session.default_cpus)
   SPARK_GRAFT_BENCH_QUERIES  comma-separated subset override
 
 Output: {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -19,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 
 # --- contention instrumentation -------------------------------------------
@@ -321,7 +322,7 @@ def compact_stdout_result(result: dict) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     names = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     names = names.split(",") if names else DEFAULT_QUERIES
 

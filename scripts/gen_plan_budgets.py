@@ -38,7 +38,32 @@ def count_exchanges(plan: str) -> int:
     return plan.count(") Exchange")
 
 
+def merge_budgets(existing: dict, registry, subset) -> dict:
+    """The budgets a subset run starts from: ``existing`` without the
+    entries no longer in ``registry`` (a renamed or removed entry must not
+    survive the merge; test_budget_file_covers_registry rejects the file
+    otherwise).  A subset name not in ``registry`` is an error."""
+    unknown = sorted(set(subset) - set(registry))
+    if unknown:
+        raise SystemExit(f"unknown entries: {unknown}")
+    return {name: n for name, n in existing.items() if name in registry}
+
+
 def main() -> None:
+    # optional argv subset: re-plan only the named entries and merge into
+    # the existing file (for a round that touched a handful of plans; the
+    # full sweep remains the default and the CI -m full path re-verifies)
+    subset = sys.argv[1:]
+    budgets = {}
+    if subset:
+        existing = {}
+        if os.path.exists(OUT):
+            with open(OUT) as fh:
+                existing = json.load(fh)
+        budgets = merge_budgets(existing, REGISTRY, subset)
+        stale = sorted(set(existing) - set(budgets))
+        if stale:
+            print(f"dropped budgets no longer in REGISTRY: {stale}")
     spark = build_session(
         app_name="gen-plan-budgets",
         master="local[8]",
@@ -46,24 +71,6 @@ def main() -> None:
         extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # optional argv subset: re-plan only the named entries and merge into
-    # the existing file (for a round that touched a handful of plans; the
-    # full sweep remains the default and the CI -m full path re-verifies)
-    subset = sys.argv[1:]
-    budgets = {}
-    if subset and os.path.exists(OUT):
-        with open(OUT) as fh:
-            budgets = json.load(fh)
-        unknown = sorted(set(subset) - set(REGISTRY))
-        if unknown:
-            raise SystemExit(f"unknown entries: {unknown}")
-        # a renamed or removed entry must not survive the merge
-        # (test_budget_file_covers_registry rejects the file otherwise)
-        stale = sorted(set(budgets) - set(REGISTRY))
-        for name in stale:
-            del budgets[name]
-        if stale:
-            print(f"dropped budgets no longer in REGISTRY: {stale}")
     for name in subset or sorted(REGISTRY):
         budgets[name] = count_exchanges(plan_text(REGISTRY[name].fn(spark, SF)))
         spark.catalog.clearCache()

@@ -157,8 +157,25 @@ def test_pq_encode_arrow_matches_expression(spark):
         r["vec_id"]: qz.micro_list(r["embedding"])
         for r in emb.filter(F.col("vec_id") < PQ_K).collect()
     }
-    a = qz.pq_encode_expr(corpus, codebooks, PQ_M, PQ_SUB)
-    b = qz.pq_encode_arrow(corpus, codebooks, PQ_M, PQ_SUB)
-    assert a.schema == b.schema
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert b.count() == corpus.count()
+    # an int id keeps its type; a null vector gets null codes, and a null
+    # component a null code in its own subspace only
+    int_ids = corpus.select(
+        (F.col("vec_id") + 2_000_000).cast("int").alias("vec_id"), "embedding"
+    )
+    holed = emb.filter(F.col("vec_id") == 0).select(
+        F.lit(-2).alias("vec_id"),
+        F.transform("embedding", lambda x, i: F.when(i != 0, x)).alias("embedding"),
+    )
+    null_row = spark.createDataFrame([(-1, None)], "vec_id int, embedding array<float>")
+    int_ids = int_ids.unionAll(null_row).unionAll(holed)
+    for df in (corpus, int_ids):
+        a = qz.pq_encode_expr(df, codebooks, PQ_M, PQ_SUB)
+        b = qz.pq_encode_arrow(df, codebooks, PQ_M, PQ_SUB)
+        assert a.schema == b.schema
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        assert b.count() == df.count()
+    assert dict(b.dtypes)["vec_id"] == "int"
+    codes = {r["vec_id"]: r for r in b.filter(F.col("vec_id") < 0).collect()}
+    assert all(codes[-1][f"code{m}"] is None for m in range(PQ_M))
+    assert codes[-2]["code0"] is None
+    assert all(codes[-2][f"code{m}"] is not None for m in range(1, PQ_M))

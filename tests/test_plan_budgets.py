@@ -50,6 +50,25 @@ def test_budget_file_covers_registry():
     )
 
 
+def test_subset_merge_drops_entries_missing_from_the_registry():
+    from scripts.gen_plan_budgets import merge_budgets
+
+    existing = {"kept": 3, "renamed_away": 7, "also_kept": 1}
+    registry = {"kept": None, "also_kept": None, "new_entry": None}
+    assert merge_budgets(existing, registry, ["kept", "new_entry"]) == {
+        "kept": 3,
+        "also_kept": 1,
+    }
+    assert existing == {"kept": 3, "renamed_away": 7, "also_kept": 1}
+
+
+def test_subset_merge_rejects_unknown_names():
+    from scripts.gen_plan_budgets import merge_budgets
+
+    with pytest.raises(SystemExit, match=r"unknown entries: \['nope'\]"):
+        merge_budgets({"kept": 3}, {"kept": None}, ["kept", "nope"])
+
+
 def _smoke(names):
     """Default-path subset (VERDICT r13 #1; same scheme as the oracle
     sweep): every 5th sorted entry, plus the high-exchange tail (budget
