@@ -256,9 +256,11 @@ def cmd_extract(args) -> int:
 
     With an upstream, each plan is sized from the upstream's probed size
     of the extract (or delta) query: partitions by the multiple-of-4
-    heuristic, and --use-sampling applies only above 100 MiB.  The dry
-    plan has nothing to probe and assumes the reference's 640 MiB."""
-    from .sources.jdbc import FALLBACK_TABLE_SIZE, plan_extract, select_statement
+    heuristic, and --use-sampling applies only above 100 MiB.  The plan
+    carries that size, so a single-range plan under 10 MiB is read on the
+    driver with no second probe (``KeyRangeDataSource.read_plan``).  The
+    dry plan has nothing to probe and assumes the reference's 640 MiB."""
+    from .sources.jdbc import plan_extract, select_statement
 
     spark = source = None
     upstream = args.duckdb_path or args.sqlite_path
@@ -275,10 +277,8 @@ def cmd_extract(args) -> int:
             return 2
         spark = _spark(args)
 
-    def size(query: str) -> int:
-        if source is None:
-            return FALLBACK_TABLE_SIZE
-        return source.size_bytes(upstream, query)
+    def size(query: str):
+        return None if source is None else source.size_bytes(upstream, query)
 
     for rel in _relations(args, args.patterns):
         if not rel.is_source_relation:

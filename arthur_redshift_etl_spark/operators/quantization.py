@@ -262,14 +262,22 @@ def pq_encode_arrow(
         for pdf in batches:
             if pdf.empty:
                 continue
-            # micro units, exact in float64; a null component reads as NaN
-            # and a null vector as all-NaN, and either gets a null code in
-            # the subspaces it touches, as in the expression form
+            # micro units, exact in float64, on a NaN-filled rows x dims
+            # grid: a null vector, a null component and the components a
+            # short vector lacks read as NaN, and each gets a null code in
+            # the subspaces it touches; components past dims are dropped.
+            # Both match the expression form's per-subspace slices.
+            vecs = pdf[vec_col].to_numpy()
             null = pdf[vec_col].isna().to_numpy()
+            lens = np.zeros(len(pdf), dtype=np.int64)
+            lens[~null] = [len(v) for v in vecs[~null]]
             xf = np.full((len(pdf), cb.shape[1]), np.nan)
-            if not null.all():
-                vecs = np.stack(pdf[vec_col].to_numpy()[~null])
-                xf[~null] = np.floor(vecs.astype(np.float64) * 1e6)
+            if lens.any():
+                flat = np.concatenate(list(vecs[lens > 0])).astype(np.float64)
+                row = np.repeat(np.arange(len(pdf)), lens)
+                col = np.arange(len(flat)) - np.repeat(np.cumsum(lens) - lens, lens)
+                keep = col < cb.shape[1]
+                xf[row[keep], col[keep]] = np.floor(flat[keep] * 1e6)
             out = {id_col: pdf[id_col].to_numpy()}
             for m in range(n_subspaces):
                 sub = xf[:, m * sub_dims:(m + 1) * sub_dims]

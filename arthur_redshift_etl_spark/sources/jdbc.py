@@ -32,9 +32,9 @@ MIN_PARTITION_BYTES = 10 * 1024 * 1024  # 10 MiB (database_extractor.py:42-53)
 MIN_PARTITION_BYTES_SAMPLED = 100 * 1024 * 1024
 DEFAULT_MAX_PARTITIONS = 32  # default_settings.yaml:70
 SAMPLING_THRESHOLD_BYTES = 100 * 1024 * 1024
-# database_extractor.py's size when its probe is unavailable; used here
-# only when no upstream can be probed (the CLI's dry plan, plain JDBC).
-# The key-range sources size every extract with KeyRangeDataSource.size_bytes.
+# database_extractor.py's size when its probe is unavailable; the planner
+# assumes it for an unprobed plan (the CLI's dry plan, plain JDBC).  The
+# key-range sources size every extract with KeyRangeDataSource.size_bytes.
 FALLBACK_TABLE_SIZE = 671_088_640
 
 SPLIT_KEY_TYPES = {"int", "long", "date", "timestamp"}
@@ -149,6 +149,8 @@ class JdbcExtractPlan:
     partition_column: Optional[str]
     num_partitions: int
     boundary_query: Optional[str]
+    # the upstream's probed size of ``query``; None when nothing was probed
+    size_bytes: Optional[int] = None
 
     def read(self, spark, url: str, properties: Optional[dict] = None,
              lower_bound=None, upper_bound=None):
@@ -171,27 +173,32 @@ class JdbcExtractPlan:
 
 def plan_extract(
     design: TableDesign,
-    table_size_bytes: int = FALLBACK_TABLE_SIZE,
+    table_size_bytes: Optional[int] = None,
     max_partitions: int = DEFAULT_MAX_PARTITIONS,
     use_sampling: bool = False,
 ) -> JdbcExtractPlan:
-    """Build the full extract plan for one source relation."""
+    """Build the full extract plan for one source relation.
+
+    ``table_size_bytes`` is the upstream's probed size, recorded on the
+    plan; unprobed (None), the heuristic assumes ``FALLBACK_TABLE_SIZE``."""
+    size = FALLBACK_TABLE_SIZE if table_size_bytes is None else table_size_bytes
     explicit_n = design.extract_settings.num_partitions
     key = find_partition_key(design)
     sampling_key = None
-    if use_sampling and should_sample(table_size_bytes) and key and "(" not in key:
+    if use_sampling and should_sample(size) and key and "(" not in key:
         sampling_key = key
     if key is None:
         num = 1
     elif explicit_n:
         num = explicit_n
     else:
-        num = maximize_partitions(table_size_bytes, max_partitions, use_sampling)
+        num = maximize_partitions(size, max_partitions, use_sampling)
     return JdbcExtractPlan(
         query=select_statement(design, add_sampling_key=sampling_key),
         partition_column=key,
         num_partitions=num,
         boundary_query=design.extract_settings.boundary_query,
+        size_bytes=table_size_bytes,
     )
 
 
@@ -236,7 +243,7 @@ def plan_incremental_extract(
     design: TableDesign,
     watermark_column: str,
     last_seen,
-    table_size_bytes: int = FALLBACK_TABLE_SIZE,
+    table_size_bytes: Optional[int] = None,
     max_partitions: int = DEFAULT_MAX_PARTITIONS,
 ) -> JdbcExtractPlan:
     """Extract only rows past ``last_seen`` on ``watermark_column``.
@@ -255,4 +262,5 @@ def plan_incremental_extract(
         partition_column=base.partition_column,
         num_partitions=base.num_partitions,
         boundary_query=base.boundary_query,
+        size_bytes=base.size_bytes,
     )

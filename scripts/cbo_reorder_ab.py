@@ -26,7 +26,8 @@ Reported per condition: the join order the optimizer actually chose
 result checksum (must be identical across conditions).
 
 Run alone (box-noise sensitive):  python scripts/cbo_reorder_ab.py
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS.
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS (default: the
+process's cores, session.default_cpus).
 """
 
 from __future__ import annotations
@@ -41,8 +42,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from arthur_redshift_etl_spark.session import default_cpus  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
+CPUS = default_cpus()
 REPS = int(os.environ.get("SPARK_GRAFT_CBO_REPS", "5"))
 
 QUERY = """

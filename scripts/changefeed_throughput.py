@@ -7,7 +7,8 @@ The docstring says it's for control-plane-sized feeds — this measures
 where that boundary actually is, so the advice carries a number:
 
     python scripts/changefeed_throughput.py
-    env: SPARK_GRAFT_FEED_ROWS (default 2_000_000), SPARK_GRAFT_CPUS (8)
+    env: SPARK_GRAFT_FEED_ROWS (default 2_000_000), SPARK_GRAFT_CPUS (default:
+    the process's cores, session.default_cpus)
 
 Output: one JSON line with rows/s for the initial sync (one big batch)
 and for a steady append→drain loop, vs the partitioned BATCH extract of
@@ -26,8 +27,10 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from arthur_redshift_etl_spark.session import default_cpus  # noqa: E402
+
 ROWS = int(os.environ.get("SPARK_GRAFT_FEED_ROWS", "2000000"))
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+CPUS = default_cpus()
 
 
 def main() -> int:

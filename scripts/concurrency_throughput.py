@@ -23,7 +23,7 @@ queries/sec/core number transfers.
 
 Run ALONE (32-core contention trap):  python scripts/concurrency_throughput.py
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-     SPARK_GRAFT_CPUS (default 32)
+     SPARK_GRAFT_CPUS (default: the process's cores, session.default_cpus)
      SPARK_GRAFT_CONC_WIDTHS="2,4,8"
      SPARK_GRAFT_CONC_QUERIES=comma subset (default: bench DEFAULT_QUERIES)
 """
@@ -41,10 +41,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 WIDTHS = [
     int(w) for w in os.environ.get("SPARK_GRAFT_CONC_WIDTHS", "2,4,8").split(",")
 ]

@@ -24,6 +24,8 @@ not recomputed (files untouched).
 
 Prints one JSON line with stage timings and pair counts; paste the row into
 SCALE.md's measured-scaling table.
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark.operators import dedup as dd  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 GROUP = 10  # near-dup variants per group
 
@@ -135,7 +137,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", type=int, default=500_000)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=default_cpus())
     ap.add_argument("--inject-kill", action="store_true")
     args = ap.parse_args()
 

@@ -9,6 +9,8 @@ float operation sequence (bit-identical doubles) but whole-stage-codegen'd.
 
 Measures the knn_bruteforce scoring shape (collection × broadcast queries)
 with a noop sink, and verifies exact value equality of every sim.
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 from __future__ import annotations
 
@@ -20,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 from arthur_redshift_etl_spark import workload  # noqa: E402
 from arthur_redshift_etl_spark.operators import similarity as sim  # noqa: E402
 
@@ -40,7 +42,7 @@ def dot_unrolled(a, b, dim):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    cpus = default_cpus()
     spark = build_session(
         app_name="dot-ab", master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),

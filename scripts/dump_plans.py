@@ -8,6 +8,8 @@ Writes plans/<tag>/<query>_<suffix>.txt (suffix default "before").
 With no query list, dumps the bench DEFAULT_QUERIES set.
 
 Plan capture only (no execution timing): safe to run on a busy box.
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 from __future__ import annotations
 
@@ -17,7 +19,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 
 def main() -> None:
@@ -35,7 +37,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     spark = build_session(
         app_name=f"dump-plans-{tag}",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
+        master=f"local[{default_cpus()}]",
         extra_conf={"spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")

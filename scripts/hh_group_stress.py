@@ -18,6 +18,8 @@ SCALE.md's "groups axis" table.
 
 Run ALONE (32-core contention trap documented in memory/SCALE.md):
     python scripts/hh_group_stress.py
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark.operators import sketch as sk  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 N_HOT = 10  # keys concentrated in group 0 (true heavy pairs)
 HOT_COUNT = 100_000
@@ -60,7 +62,7 @@ def build_df(spark, groups: int):
 def main() -> None:
     spark = build_session(
         app_name="hh-group-stress",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{default_cpus()}]",
         shuffle_partitions=32,
         extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
     )

@@ -9,6 +9,8 @@ strings (guide §2.3 narrower types / shuffle fewer bytes).
 
 Verifies the candidate-pair sets are identical, then times the full
 minhash_dedup_pairs pipeline shape with both key forms.
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 from __future__ import annotations
 
@@ -22,7 +24,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
 from arthur_redshift_etl_spark.operators import dedup as dd  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 
 def lsh_pairs_struct(signatures, id_col="doc_id", num_hashes=8, rows_per_band=2):
@@ -53,7 +55,7 @@ def lsh_pairs_struct(signatures, id_col="doc_id", num_hashes=8, rows_per_band=2)
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    cpus = default_cpus()
     spark = build_session(
         app_name="bandkey-ab", master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),

@@ -34,7 +34,7 @@ Per config it records:
 
 Run ALONE (32-core contention trap):  python scripts/mixed_workload_interference.py
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-     SPARK_GRAFT_CPUS (default 32)
+     SPARK_GRAFT_CPUS (default: the process's cores, session.default_cpus)
      SPARK_GRAFT_MIX_RATE (default 400000)
      SPARK_GRAFT_MIX_CONFIGS (default "equal,weighted,sized")
 """
@@ -52,10 +52,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 RATE = int(os.environ.get("SPARK_GRAFT_MIX_RATE", "400000"))
 CONFIGS = os.environ.get("SPARK_GRAFT_MIX_CONFIGS", "equal,weighted,sized").split(",")
 FACT_QUERIES = [

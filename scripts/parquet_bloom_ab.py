@@ -21,6 +21,8 @@ Probes: HIT (one existing k) and MISS (absent k) equality filters, warmed,
 averaged over repeats.  MISS is the RTBF-audit shape: proving a key is gone.
 
 Run ALONE (timings): python scripts/parquet_bloom_ab.py [--rows N]
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 import argparse
 import os
@@ -31,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 
 def file_bytes(path: str) -> int:
@@ -69,7 +71,7 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = build_session(
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+        master=f"local[{default_cpus()}]",
         extra_conf={"spark.driver.memory": "8g"},
     )
     n = args.rows

@@ -7,6 +7,8 @@ Usage:
 
 Run on the SAME box immediately before and after a plan change; compare the
 min/median.  Also prints the shuffle-exchange count of each entry's plan.
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 from __future__ import annotations
 
@@ -17,7 +19,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from arthur_redshift_etl_spark.plans.lint import plan_text  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 from arthur_redshift_etl_spark.workload import REGISTRY  # noqa: E402
 
 
@@ -25,7 +27,7 @@ def main() -> None:
     names = sys.argv[1].split(",")
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = build_session(
         app_name="pin-sweep-ab", master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),

@@ -13,6 +13,8 @@ Equivalence: per (row, m) the err expression is literally the same
 expression tree; posexplode's pos column enumerates 0..M-1 exactly as the
 lit(m) labels did; groupBy("m") then aggregates the same multiset of
 (m, err) values, so the 4 output rows are bit-identical.  Asserted below.
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 from __future__ import annotations
 
@@ -26,12 +28,12 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
 from arthur_redshift_etl_spark.operators import quantization as qz  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = build_session(
         app_name="pq-recon-ab", master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),

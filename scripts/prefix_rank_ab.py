@@ -12,6 +12,8 @@ exchange, no partition-wide sort, bounded per-row work.
 Candidate-set equivalence: both produce exactly the first prefix_len
 elements of the same per-doc total order, so outputs are identical (not
 just equivalent) — asserted below.
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 from __future__ import annotations
 
@@ -26,12 +28,12 @@ from pyspark.sql.window import Window  # noqa: E402
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
 from arthur_redshift_etl_spark.operators import dedup as dd  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = build_session(
         app_name="prefix-rank-ab", master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),

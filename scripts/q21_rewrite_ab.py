@@ -13,6 +13,8 @@ groupBy clustering so the aggregate adds NO exchange at all.
 
 Verifies exact row parity against the current entry, then times both with
 the noop sink.
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 from __future__ import annotations
 
@@ -25,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 
 def q21_arrays(spark, sf_dir):
@@ -80,7 +82,7 @@ def q21_arrays(spark, sf_dir):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    cpus = default_cpus()
     spark = build_session(
         app_name="q21-ab", master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),

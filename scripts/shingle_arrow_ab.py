@@ -17,6 +17,8 @@ Arrow-batched Python pass that produces BYTE-IDENTICAL (id, h) rows:
 - null/short docs: dropped by explode == skipped in Python.
 
 Parity is asserted as exact multiset equality before timing.
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 from __future__ import annotations
 
@@ -32,7 +34,7 @@ from pyspark.sql.types import LongType, StructField, StructType  # noqa: E402
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
 from arthur_redshift_etl_spark.operators import dedup as dd  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 
 def arrow_shingle_hashes(df, id_col="doc_id", text_col="text", n=3):
@@ -75,7 +77,7 @@ def arrow_shingle_hashes(df, id_col="doc_id", text_col="text", n=3):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = build_session(
         app_name="shingle-arrow-ab", master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),

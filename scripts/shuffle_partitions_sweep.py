@@ -15,7 +15,7 @@ degrades at 512 with AQE coalescing OFF (the counterfactual pass).
 
 Run ALONE (32-core contention trap):  python scripts/shuffle_partitions_sweep.py
 Env: SPARK_GRAFT_SF_DIR (default /tmp/spark_graft_sf1)
-     SPARK_GRAFT_CPUS (default 32)
+     SPARK_GRAFT_CPUS (default: the process's cores, session.default_cpus)
      SPARK_GRAFT_SWEEP_SETTINGS="32,128,512"
 """
 
@@ -30,10 +30,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
-from arthur_redshift_etl_spark.session import build_session  # noqa: E402
+from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/tmp/spark_graft_sf1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 SETTINGS = [
     int(s)
     for s in os.environ.get("SPARK_GRAFT_SWEEP_SETTINGS", "32,128,512").split(",")

@@ -36,6 +36,8 @@ Env: SPARK_GRAFT_STREAM_RATES="100000,400000,1600000" (rows/s steps)
      SPARK_GRAFT_STREAM_SECS=60 (per step)
      SPARK_GRAFT_STREAM_STATE=hdfs|rocksdb (state store backend)
      SPARK_GRAFT_STREAM_SHAPES=windowed_rollup,session_windows,... (subset)
+
+Cores: SPARK_GRAFT_CPUS, else the process's cores (session.default_cpus).
 """
 
 from __future__ import annotations
@@ -48,6 +50,8 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from arthur_redshift_etl_spark.session import default_cpus  # noqa: E402
+
 RATES = [
     int(r)
     for r in os.environ.get(
@@ -55,7 +59,7 @@ RATES = [
     ).split(",")
 ]
 STEP_SECS = int(os.environ.get("SPARK_GRAFT_STREAM_SECS", "60"))
-CORES = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+CORES = default_cpus()
 STATE_BACKEND = os.environ.get("SPARK_GRAFT_STREAM_STATE", "hdfs").lower()
 SHAPE_FILTER = {
     s

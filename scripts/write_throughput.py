@@ -18,7 +18,7 @@ sf1.0-equivalent lineitem (6M rows, scripts/bench_scale_tier.py tier):
 Run ALONE (32-core contention trap):  python scripts/write_throughput.py
 Env: SPARK_GRAFT_WRITE_SRC (default /tmp/spark_graft_sf1/lineitem.parquet;
      generate with SPARK_GRAFT_SCALE_COPIES=10 scripts/bench_scale_tier.py)
-     SPARK_GRAFT_CPUS (default 32)
+     SPARK_GRAFT_CPUS (default: the process's cores, session.default_cpus)
 """
 
 from __future__ import annotations
@@ -33,10 +33,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from arthur_redshift_etl_spark.session import default_cpus  # noqa: E402
+
 SRC = os.environ.get(
     "SPARK_GRAFT_WRITE_SRC", "/tmp/spark_graft_sf1/lineitem.parquet"
 )
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 OUT = "/tmp/write_tp"
 
 

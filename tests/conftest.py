@@ -18,7 +18,15 @@ def spark(tmp_path_factory):
         master="local[4]",
         shuffle_partitions=4,
         warehouse_dir=warehouse,
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "4g"},
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "4g",
+            # plans/metrics.stage_totals sums the status store's retained
+            # stages; at the default 1000 the store drops 100 at a time, and
+            # a before/after diff across a drop goes negative in whichever
+            # test the suite's running stage count happens to put there
+            "spark.ui.retainedStages": "100000",
+        },
     )
     yield session
     session.stop()

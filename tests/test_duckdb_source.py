@@ -616,6 +616,178 @@ def test_empty_relation_plans_one_range(registered, duck_path, engine):
     assert df.count() == 0
 
 
+# -- driver read of small single-range plans ---------------------------------
+
+
+def _source_class(engine):
+    from arthur_redshift_etl_spark.sources.duckdb_source import DuckDBDataSource
+    from arthur_redshift_etl_spark.sources.sqlite_source import SQLiteDataSource
+
+    return {"duckdb": DuckDBDataSource, "sqlite": SQLiteDataSource}[engine]
+
+
+def _python_scan(df) -> bool:
+    """Whether the executed plan reads through a Python DataSource."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "BatchScan" in plan and "(Python)" in plan
+
+
+def _multiset(df):
+    from collections import Counter
+
+    return Counter(tuple(map(repr, r)) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def typed_upstreams(tmp_path_factory):
+    """{engine: path} of a ``typed`` table with one column per type the
+    engine maps, one row of values and one row of NULLs."""
+    import sqlite3
+
+    d = tmp_path_factory.mktemp("typed")
+    duck = str(d / "typed.duckdb")
+    con = duckdb.connect(duck)
+    con.execute(
+        "CREATE TABLE typed AS SELECT * FROM (VALUES "
+        "(1, TRUE, 1::TINYINT, 2::SMALLINT, 3::INTEGER, 4::BIGINT, 5::HUGEINT, "
+        "1.5::FLOAT, 2.5::DOUBLE, 'a'::VARCHAR, 'ab'::BLOB, DATE '2020-01-02', "
+        "TIMESTAMP '2020-01-02 03:04:05.123456', "
+        "TIMESTAMPTZ '2020-01-02 03:04:05+02', 12.34::DECIMAL(10,2)), "
+        "(2, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL, "
+        "NULL, NULL, NULL)) v(k, b, ti, si, i, bi, hi, f, d, s, bl, dt, ts, tstz, dec)"
+    )
+    con.close()
+    lite = str(d / "typed.sqlite")
+    con = sqlite3.connect(lite)
+    con.execute(
+        "CREATE TABLE typed (k INTEGER, bi BIGINT, r REAL, d DOUBLE, f FLOAT, "
+        "s TEXT, v VARCHAR(20))"
+    )
+    con.executemany(
+        "INSERT INTO typed VALUES (?, ?, ?, ?, ?, ?, ?)",
+        [(1, 4, 1.5, 2.5, 3.5, "a", "b"), (2, None, None, None, None, None, None)],
+    )
+    con.commit()
+    con.close()
+    return {"duckdb": duck, "sqlite": lite}
+
+
+def _small_plan(cls, path, query):
+    from arthur_redshift_etl_spark.sources.jdbc import JdbcExtractPlan
+
+    size = cls.size_bytes(path, query)
+    return JdbcExtractPlan(query, None, 1, None, size_bytes=size)
+
+
+@pytest.mark.parametrize("where", ["", " WHERE k < 0"], ids=["rows", "empty"])
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite"])
+def test_driver_read_matches_datasource_read(
+    registered, typed_upstreams, engine, where
+):
+    """A small single-range plan is read on the driver, with the schema,
+    rows (NULLs included) and single partition of the Python DataSource
+    read of the same query; an empty relation too."""
+    from arthur_redshift_etl_spark.sources.duckdb_source import _TYPE_MAP
+
+    cls, path = _source_class(engine), typed_upstreams[engine]
+    query = f"SELECT * FROM typed{where}"
+    got = cls.read_plan(registered, path, _small_plan(cls, path, query))
+    ref = registered.read.format(engine).option("path", path).option(
+        "query", query
+    ).load()
+    if engine == "duckdb":
+        assert set(_TYPE_MAP.values()) <= {t for _, t in got.dtypes}
+    assert got.schema == ref.schema
+    assert not _python_scan(got) and _python_scan(ref)
+    assert got.rdd.getNumPartitions() == 1 == ref.rdd.getNumPartitions()
+    assert _multiset(got) == _multiset(ref)
+    assert got.count() == (0 if where else 2)
+
+
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite"])
+def test_small_extract_skips_the_python_datasource(registered, duck_path, engine):
+    source, path = _engine(engine, duck_path)
+    df = source.extract_design(registered, _orders_design(), path)
+    assert not _python_scan(df)
+
+
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite"])
+def test_multi_range_plan_keeps_the_python_datasource(registered, duck_path, engine):
+    source, path = _engine(engine, duck_path)
+    df = source.extract_design(registered, _orders_design(num_partitions=4), path)
+    assert _python_scan(df)
+    assert df.rdd.getNumPartitions() == 4
+
+
+@pytest.fixture(scope="module")
+def big_sqlite(tmp_path_factory):
+    """~23 MiB of Arrow in one SQLite table: 200k rows of two integers and
+    a 100-char string."""
+    import sqlite3
+
+    p = str(tmp_path_factory.mktemp("bigsqlite") / "big.sqlite")
+    con = sqlite3.connect(p)
+    con.execute(
+        "CREATE TABLE big AS WITH RECURSIVE r(i) AS "
+        "(SELECT 0 UNION ALL SELECT i + 1 FROM r WHERE i < 199999) "
+        "SELECT i AS k, i * 2 AS v, printf('%0100d', i) AS pad FROM r"
+    )
+    con.commit()
+    con.close()
+    return p
+
+
+@pytest.mark.parametrize("engine", ["duckdb", "sqlite"])
+def test_large_expression_key_plan_keeps_the_python_datasource(
+    registered, big_duck, big_sqlite, engine
+):
+    """Over 10 MiB, the expression-key single-range fallback stays a lazy
+    Python DataSource read: the driver read is for small tables only."""
+    from arthur_redshift_etl_spark.sources.jdbc import (
+        MIN_PARTITION_BYTES,
+        JdbcExtractPlan,
+    )
+
+    cls = _source_class(engine)
+    path = big_duck if engine == "duckdb" else big_sqlite
+    query = "SELECT k, v, pad FROM big"
+    size = cls.size_bytes(path, query)
+    assert size > MIN_PARTITION_BYTES
+    plan = JdbcExtractPlan(
+        query=query,
+        partition_column="CAST(unix_timestamp(k) AS BIGINT)",
+        num_partitions=4,
+        boundary_query=None,
+        size_bytes=size,
+    )
+    df = cls.read_plan(registered, path, plan)
+    assert _python_scan(df)
+    assert df.rdd.getNumPartitions() == 1
+
+
+def test_batch_change_feed_keeps_the_python_datasource(
+    registered, tmp_path, monkeypatch
+):
+    """The change feed's plan carries no probed size, so even a one-range
+    drain of a small delta reads through the Python DataSource."""
+    from arthur_redshift_etl_spark.sources.duckdb_source import (
+        DuckDBDataSource,
+        batch_change_feed,
+    )
+
+    def no_driver_read(*args):
+        raise AssertionError("batch_change_feed read on the driver")
+
+    monkeypatch.setattr(DuckDBDataSource, "_read_on_driver", no_driver_read)
+    feed = _feed_db(tmp_path, 100)
+    target = str(tmp_path / "out")
+    r = batch_change_feed(
+        registered, feed, "changes", "change_id", target, num_partitions=1
+    )
+    assert r["rows"] == 100
+    assert _read_target(registered, target).count() == 100
+
+
 def test_change_feed_protocol_property_no_loss_no_dup(tmp_path):
     """Drive the reader protocol directly (no Spark): random interleavings
     of upstream appends and read() calls must deliver every row exactly

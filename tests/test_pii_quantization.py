@@ -167,6 +167,22 @@ def test_pq_encode_arrow_matches_expression(spark):
         F.transform("embedding", lambda x, i: F.when(i != 0, x)).alias("embedding"),
     )
     null_row = spark.createDataFrame([(-1, None)], "vec_id int, embedding array<float>")
+    # ragged vectors: a short one (one subspace; one ending mid-subspace;
+    # an empty one) gets null codes in the subspaces it misses, and extra
+    # components past the codebook's dimensions are ignored
+    vec0 = F.col("embedding")
+    ragged = [
+        (-3, F.slice(vec0, 1, PQ_SUB)),
+        (-4, F.slice(vec0, 1, PQ_SUB + 5)),
+        (-5, F.concat(vec0, F.array(F.lit(1.5).cast("float"), F.lit(-2.0).cast("float")))),
+        (-6, F.slice(vec0, 1, 0)),
+    ]
+    for vid, vec in ragged:
+        holed = holed.unionAll(
+            emb.filter(F.col("vec_id") == 0).select(
+                F.lit(vid).alias("vec_id"), vec.alias("embedding")
+            )
+        )
     int_ids = int_ids.unionAll(null_row).unionAll(holed)
     for df in (corpus, int_ids):
         a = qz.pq_encode_expr(df, codebooks, PQ_M, PQ_SUB)
@@ -179,3 +195,9 @@ def test_pq_encode_arrow_matches_expression(spark):
     assert all(codes[-1][f"code{m}"] is None for m in range(PQ_M))
     assert codes[-2]["code0"] is None
     assert all(codes[-2][f"code{m}"] is not None for m in range(1, PQ_M))
+    whole = b.filter(F.col("vec_id") == 2_000_000).first()
+    for vid in (-3, -4):
+        assert codes[vid]["code0"] == whole["code0"]
+        assert all(codes[vid][f"code{m}"] is None for m in range(1, PQ_M))
+    assert all(codes[-5][f"code{m}"] == whole[f"code{m}"] for m in range(PQ_M))
+    assert all(codes[-6][f"code{m}"] is None for m in range(PQ_M))
