@@ -5,9 +5,13 @@ Reference parity (``python/etl/load.py``, ``data_warehouse.py``):
 - CTAS identity/na-row path (:506-551) → ``operators.identity``;
 - staging-name rewrite of dependency references (:221-245);
 - failure propagation / skip_copy (:202-219);
-- parallel source loading (:994-1053) → ThreadPoolExecutor submitting Spark
-  jobs (FAIR scheduler spreads them across the cluster);
-- sequential transformation build (:1056-1106);
+- parallel source loading (:994-1053) and the sequential transformation
+  build (:1056-1106) → one ThreadPoolExecutor over the dependency DAG: a
+  relation starts as soon as its dependencies have finished, sources and
+  transformations alike (the reference's execution levels, relation.py:
+  568-646, without the barrier between levels);
+- one scan per relation after its write: ANALYZE's row count is the
+  build's audit count, and publish carries the staged statistics over;
 - load / upgrade / update drivers (:1131-1367);
 - blue-green swap (``data_warehouse.py:105-204``): here a metadata-only
   re-registration of external tables at versioned locations — each build
@@ -22,15 +26,18 @@ regardless of data size — same property as Redshift's schema rename.
 
 from __future__ import annotations
 
+import heapq
 import logging
 import re
 import uuid
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Dict, Iterable, List, Optional, Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .design import TableDesign
 from .errors import (
@@ -112,20 +119,27 @@ def _table_type(spark: SparkSession, full: str) -> Optional[str]:
     return spark.catalog.getTable(full).tableType
 
 
-def table_location(spark: SparkSession, full: str) -> Optional[str]:
-    """Storage path a table is registered at, without the ``file:`` scheme;
-    None for a view.
+def _detailed_info(spark: SparkSession, full: str, key: str) -> Optional[str]:
+    """The ``key`` row of a relation's DESCRIBE FORMATTED, None if absent.
 
-    Only the detailed-information section counts: a column named
-    ``Location`` is listed above it.  The rows are filtered in Python, as
-    a DataFrame filter over the DESCRIBE output would run a Spark job.
+    Only the detailed-information section counts: a column named like the
+    key (``Location``, ``Statistics``) is listed above it.  The rows are
+    filtered in Python, as a DataFrame filter over the DESCRIBE output
+    would run a Spark job.
     """
     detailed = False
     for row in spark.sql(f"DESCRIBE FORMATTED {full}").collect():
         detailed = detailed or row["col_name"] == "# Detailed Table Information"
-        if detailed and row["col_name"] == "Location":
-            return row["data_type"].replace("file:", "")
+        if detailed and row["col_name"] == key:
+            return row["data_type"]
     return None
+
+
+def table_location(spark: SparkSession, full: str) -> Optional[str]:
+    """Storage path a table is registered at, without the ``file:`` scheme;
+    None for a view."""
+    location = _detailed_info(spark, full, "Location")
+    return None if location is None else location.replace("file:", "")
 
 
 def _drop_relation(ctx: LoadContext, db: str, table: str) -> None:
@@ -150,38 +164,53 @@ def _has_layout(design: TableDesign) -> bool:
     return bool(_bucket_spec(design) or design.attributes.get("partition_by"))
 
 
+def _columns_ddl(spark: SparkSession, schema: StructType) -> str:
+    """``(`name` TYPE, ...) `` declaring ``schema`` as parquet reads it back:
+    every column nullable.  Field metadata has no DDL form and is dropped."""
+    jschema = spark._jsparkSession.parseDataType(schema.json()).asNullable()
+    return "(" + ", ".join(
+        f"{_quote(f.name())} {f.dataType().sql()}" for f in jschema.fields()
+    ) + ") "
+
+
 def _register(
     ctx: LoadContext,
     db: str,
     table: str,
     location: str,
     design: Optional[TableDesign] = None,
+    schema: Optional[StructType] = None,
 ) -> None:
     """(Re)register ``db.table`` as an external parquet table at ``location``.
 
-    Without a design layout the schema comes from the files.  A bucketed
-    design declares its columns and ``CLUSTERED BY ... INTO N BUCKETS`` so
-    co-located joins stay shuffle-free; a partitioned one declares
-    ``PARTITIONED BY`` and recovers the partitions, so filters on the
-    partition column prune at the directory level (PartitionFilters).
+    The columns are ``schema`` when the caller wrote the files and so knows
+    it (no schema-inference job), else the design's for a design layout,
+    else whatever the files hold.  A bucketed design declares
+    ``CLUSTERED BY ... INTO N BUCKETS`` so co-located joins stay
+    shuffle-free; a partitioned one declares ``PARTITIONED BY`` and
+    recovers the partitions, so filters on the partition column prune at
+    the directory level (PartitionFilters).
     """
     full = f"{_quote(db)}.{_quote(table)}"
     columns = layout = ""
     part_cols: List[str] = []
-    if design is not None and _has_layout(design):
+    if schema is not None:
+        columns = _columns_ddl(ctx.spark, schema)
+    elif design is not None and _has_layout(design):
         columns = "(" + ", ".join(
-            f"{c.name} {c.spark_type().simpleString()}"
+            f"{_quote(c.name)} {c.spark_type().simpleString()}"
             for c in design.unskipped_columns
         ) + ") "
+    if design is not None and _has_layout(design):
         bucket = _bucket_spec(design)
         if bucket:
-            keys = ", ".join(bucket[0])
+            keys = ", ".join(_quote(c) for c in bucket[0])
             layout = (
                 f"CLUSTERED BY ({keys}) SORTED BY ({keys}) INTO {bucket[1]} BUCKETS "
             )
         else:
             part_cols = list(design.attributes["partition_by"])
-            layout = f"PARTITIONED BY ({', '.join(part_cols)}) "
+            layout = f"PARTITIONED BY ({', '.join(_quote(c) for c in part_cols)}) "
     _drop_relation(ctx, db, table)
     ctx.spark.sql(
         f"CREATE TABLE {full} {columns}USING parquet {layout}LOCATION '{location}'"
@@ -259,17 +288,19 @@ def _bloom_options(design) -> dict:
     return opts
 
 
-def _analyze_relation(ctx: "LoadContext", schema: str, table: str, design) -> None:
-    """Feed the CBO after a (re)registration.
+def _analyze_relation(ctx: "LoadContext", schema: str, table: str, design) -> int:
+    """Feed the CBO after a (re)registration; returns the row count the
+    statistics now hold, read back from DESCRIBE (no job).
 
-    Table-level ``COMPUTE STATISTICS`` (size + row count) is a
-    metadata-only scan and always runs: it's what broadcast decisions and
-    AQE thresholds consume.  ``attributes.stats_columns: [col, ...]``
-    additionally computes per-column ndv/min/max/null-count — the inputs
-    join REORDERING actually needs (``spark.sql.cbo.joinReorder`` can't
-    estimate join selectivity from row counts alone, so without column
-    stats it keeps the written order).  Column stats cost one real scan
-    of the listed columns per publish, so they're opt-in and belong on
+    Table-level ``COMPUTE STATISTICS`` (size + row count) is one scan and
+    always runs: it's what broadcast decisions and AQE thresholds consume,
+    and its row count doubles as the build's post-load COUNT(*) audit.
+    ``attributes.stats_columns: [col, ...]`` additionally computes
+    per-column ndv/min/max/null-count — the inputs join REORDERING
+    actually needs (``spark.sql.cbo.joinReorder`` can't estimate join
+    selectivity from row counts alone, so without column stats it keeps
+    the written order).  Column stats cost one real scan of the listed
+    columns per build, so they're opt-in and belong on
     join/filter keys only — at 100 TB "FOR ALL COLUMNS" on a wide fact
     is a full-table read per refresh for stats mostly nothing consumes.
     Measured effect: scripts/cbo_reorder_ab.py (SCALE.md round 9).
@@ -282,12 +313,41 @@ def _analyze_relation(ctx: "LoadContext", schema: str, table: str, design) -> No
         ctx.spark.sql(
             f"ANALYZE TABLE {full} COMPUTE STATISTICS FOR COLUMNS {col_list}"
         )
+    stats = _detailed_info(ctx.spark, full, "Statistics") or ""  # "<b> bytes, <n> rows"
+    rows = re.search(r"(\d+) rows", stats)
+    if rows is None:
+        raise ETLRuntimeError(f"{full}: no row count after ANALYZE ({stats!r})")
+    return int(rows.group(1))
+
+
+def _copy_stats(ctx: "LoadContext", src: str, dst: str) -> None:
+    """Give table ``dst`` the catalog statistics of ``src`` (size, row count,
+    column stats), for a registration of the same files.
+
+    The statistics travel as the JVM ``Option[CatalogStatistics]`` itself:
+    py4j turns a Scala ``BigInt`` into a Python int, so they cannot be
+    rebuilt on this side.
+    """
+    state = ctx.spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier
+    stats = state.catalog().getTableMetadata(ident(src)).stats()
+    state.catalog().alterTableStats(ident(dst), stats)
+
+
+def _empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty DataFrame of ``schema`` from an empty Arrow table: a local
+    scan, where ``createDataFrame([], schema)`` is a Python RDD whose run
+    starts a Python worker."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
 
 
 def materialize_dataframe(ctx: LoadContext, rel: Relation, df: DataFrame, db: str) -> int:
     """Write the relation's data (versioned location) and register the table.
 
-    Returns the row count (the reference's post-build COUNT(*) audit).
+    Returns the row count (the reference's post-build COUNT(*) audit), as
+    the ANALYZE that follows the write stored it: one scan, not two.
     """
     location = ctx.table_location(rel.table_name)
     sort_keys = rel.design.attributes.get("compound_sort") or []
@@ -308,8 +368,7 @@ def materialize_dataframe(ctx: LoadContext, rel: Relation, df: DataFrame, db: st
             .sortBy(*cols)
             .saveAsTable(f"{_quote(db)}.{_quote(rel.table_name.table)}")
         )
-        _analyze_relation(ctx, db, rel.table_name.table, rel.design)
-        return ctx.spark.table(f"{_quote(db)}.{_quote(rel.table_name.table)}").count()
+        return _analyze_relation(ctx, db, rel.table_name.table, rel.design)
     writer_df = df
     part_cols = list(rel.design.attributes.get("partition_by") or [])
     if part_cols:
@@ -372,16 +431,15 @@ def materialize_dataframe(ctx: LoadContext, rel: Relation, df: DataFrame, db: st
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(location)
-    _register(ctx, db, rel.table_name.table, location, rel.design)
+    _register(ctx, db, rel.table_name.table, location, rel.design, df.schema)
     # stats feed Catalyst's CBO (broadcast decisions, join reordering)
-    _analyze_relation(ctx, db, rel.table_name.table, rel.design)
-    return ctx.spark.read.parquet(location).count()
+    return _analyze_relation(ctx, db, rel.table_name.table, rel.design)
 
 
 def build_source_relation(ctx: LoadContext, rel: Relation, db: str) -> int:
     """TABLE path: read extracted/static files, apply design schema, load."""
     if ctx.skip_copy or rel.skip_copy:
-        df = ctx.spark.createDataFrame([], rel.design.to_spark_schema())
+        df = _empty_frame(ctx.spark, rel.design.to_spark_schema())
         return materialize_dataframe(ctx, rel, df, db)
     if not rel.data_location:
         raise ETLRuntimeError(f"{rel.identifier} has no data location")
@@ -552,11 +610,10 @@ def build_one_relation(
 def _build_in_pool(
     ctx: LoadContext, rel: Relation, use_staging: bool, staging_ids: Sequence[str]
 ) -> int:
-    """One build on a pool thread (parallel sources, percolator): the same
-    broadcast-debris exposure as the sequential loop in :func:`_build_all`,
-    on the shared driver heap, so heap hygiene runs first — single-flight,
-    so the pool's threads never stack stop-the-world GCs for the same
-    debris."""
+    """One build on a pool thread (the DAG pool of :func:`_build_all`, the
+    percolator): builds share one driver heap and its broadcast debris, so
+    heap hygiene runs first — single-flight, so the pool's threads never
+    stack stop-the-world GCs for the same debris."""
     ensure_heap_headroom(ctx.spark, single_flight=True)
     return build_one_relation(ctx, rel, use_staging, staging_ids)
 
@@ -564,16 +621,32 @@ def _build_in_pool(
 def _build_all(
     ctx: LoadContext, relations: Sequence[Relation], use_staging: bool
 ) -> List[Relation]:
-    """Sources in parallel (thread pool → FAIR scheduler), transformations
-    sequentially in execution order.  Returns failed relations."""
-    staging_ids = [r.identifier for r in relations] if use_staging else []
-    failed: List[Relation] = []
+    """Build ``relations`` (in execution order) on their dependency DAG, in
+    one pool of ``ctx.max_concurrency`` threads.  Returns the failed
+    relations, in execution order.
 
-    # externals attach alongside sources: no data movement, no dependencies
-    sources = [
-        r for r in relations if r.is_source_relation or r.is_external_relation
-    ]
-    transforms = [r for r in relations if r.is_transformation]
+    A relation is submitted once each of its dependencies in the selection
+    has finished, so a transformation starts while unrelated sources are
+    still loading; among ready relations, execution order goes first.  A
+    catalog-sentinel relation depends on every other one
+    (``sanitize_dependencies``) and so builds last.  A failed build marks
+    its dependents skip_copy and leaves an empty table before they are
+    released, so they still build, empty (load.py:202-219).  Every build
+    inherits the caller's job group, so ``terminate_builds`` reaches it.
+    """
+    relations = list(relations)
+    staging_ids = [r.identifier for r in relations] if use_staging else []
+    position = {r.identifier: i for i, r in enumerate(relations)}
+    blockers = {
+        r.identifier: {d for d in r.dependencies if d in position} for r in relations
+    }
+    dependents: Dict[str, List[str]] = {ident: [] for ident in position}
+    for ident, deps in blockers.items():
+        for dep in deps:
+            dependents[dep].append(ident)
+    ready = [position[ident] for ident, deps in blockers.items() if not deps]
+    heapq.heapify(ready)
+    failed: List[Relation] = []
 
     def build_empty_fallback(rel: Relation) -> None:
         """The reference creates DDL before filling, so a failed fill leaves
@@ -582,43 +655,58 @@ def _build_all(
             return
         db = as_staging(rel.table_name.schema) if use_staging else rel.table_name.schema
         try:
-            df = ctx.spark.createDataFrame([], rel.design.to_spark_schema())
+            df = _empty_frame(ctx.spark, rel.design.to_spark_schema())
             materialize_dataframe(ctx, rel, df, db)
         except Exception:
             logger.warning("could not create empty fallback for %s", rel.identifier)
 
-    def load_source(rel: Relation) -> None:
+    def build(rel: Relation) -> bool:
+        """Build one relation; True when it failed."""
         try:
             _build_in_pool(ctx, rel, use_staging, staging_ids)
+            return False
         except Exception as exc:
-            logger.error("source %s failed: %s", rel.identifier, exc)
+            logger.error("%s %s failed: %s", rel.kind, rel.identifier, exc)
             rel.failure_exc = exc  # type: ignore[attr-defined]
-            failed.append(rel)
-            build_empty_fallback(rel)
-
-    if sources:
-        with ThreadPoolExecutor(max_workers=ctx.max_concurrency) as pool:
-            list(pool.map(load_source, sources))
-    for rel in failed:
-        mark_failure(relations, rel)
-
-    for rel in transforms:
-        if rel.failed:
-            continue
-        try:
-            # long rebuilds accumulate broadcast/shuffle blocks that only a
-            # driver GC lets the ContextCleaner release; on a tight heap the
-            # debris kills later broadcast builds (measured: plans/heap.py)
-            ensure_heap_headroom(ctx.spark)
-            build_one_relation(ctx, rel, use_staging, staging_ids)
-        except Exception as exc:
-            logger.error("transformation %s failed: %s", rel.identifier, exc)
-            rel.failure_exc = exc  # type: ignore[attr-defined]
-            failed.append(rel)
+            # dependents are marked skip_copy, and still get built (empty)
             mark_failure(relations, rel)
-            # dependents were marked skip_copy; they still get built (empty)
             build_empty_fallback(rel)
-    return failed
+            return True
+
+    def release(rel: Relation) -> None:
+        for child in dependents[rel.identifier]:
+            blockers[child].discard(rel.identifier)
+            if not blockers[child]:
+                heapq.heappush(ready, position[child])
+
+    running: Dict[Future, Relation] = {}
+    with ThreadPoolExecutor(max_workers=ctx.max_concurrency) as pool:
+        while ready or running:
+            # submit only into a free thread, so the heap check below runs
+            # right before the build it guards
+            while ready and len(running) < ctx.max_concurrency:
+                rel = relations[heapq.heappop(ready)]
+                if rel.is_transformation:
+                    if rel.failed:
+                        release(rel)
+                        continue
+                    # long rebuilds accumulate broadcast/shuffle blocks that
+                    # only a driver GC lets the ContextCleaner release; on a
+                    # tight heap the debris kills later broadcast builds
+                    # (measured: plans/heap.py)
+                    ensure_heap_headroom(ctx.spark)
+                # wrapped per submission: each build gets its own copy of
+                # this thread's local properties (job group, scheduler pool)
+                # and the session's job tags
+                target = inheritable_thread_target(ctx.spark)(build)
+                running[pool.submit(target, rel)] = rel
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in done:
+                rel = running.pop(fut)
+                if fut.result():
+                    failed.append(rel)
+                release(rel)
+    return sorted(failed, key=lambda r: position[r.identifier])
 
 
 def publish(ctx: LoadContext, relations: Sequence[Relation]) -> None:
@@ -627,7 +715,8 @@ def publish(ctx: LoadContext, relations: Sequence[Relation]) -> None:
     Metadata-only, like the reference's schema renames: each production
     table's registration is cloned into the backup database, then each
     staged registration into production, so location, bucket spec and
-    partitions carry over as registered.  Views are recreated last.
+    partitions carry over as registered, and so do the staged statistics
+    (the build's ANALYZE).  Views are recreated last.
     """
     schemas = sorted({r.table_name.schema for r in relations})
     for schema in schemas:
@@ -650,9 +739,9 @@ def publish(ctx: LoadContext, relations: Sequence[Relation]) -> None:
             logger.warning("%s missing from staging (failed build); keeping previous", rel.identifier)
             continue
         _clone_registration(ctx, staged, tn.schema, tn.table)
-        # re-registration discards staging stats; recompute on the
-        # production name so the CBO sees sizes
-        _analyze_relation(ctx, tn.schema, tn.table, rel.design)
+        # re-registration discards the statistics; the staged table's
+        # describe the same files, so the CBO keeps them without a rescan
+        _copy_stats(ctx, staged, f"{_quote(tn.schema)}.{_quote(tn.table)}")
     for rel in views:
         tn = rel.table_name
         try:
@@ -1458,7 +1547,8 @@ def load_sources_as_extracted(
                         skipped,
                     )
                 futures[ident] = pool.submit(
-                    _build_in_pool, ctx, rel, True, staging_ids
+                    inheritable_thread_target(ctx.spark)(_build_in_pool),
+                    ctx, rel, True, staging_ids,
                 )
             for ident, fut in list(futures.items()):
                 if fut.done():
