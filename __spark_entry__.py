@@ -36,7 +36,7 @@ _ORACLE_NAMES = frozenset(workload.oracles())
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return workload.revenue_by_nation(spark, "/root/testdata/sf0.001")
+    return workload.REGISTRY["revenue_by_nation"].fn(spark, "/root/testdata/sf0.001")
 
 
 # The driver samples only the first 50 catalog entries per round, so each

@@ -9,7 +9,7 @@ plan gives the dependencies (SURVEY §3.3 note).
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from typing import List
 
-from .design import TableDesign, spark_type_to_sql_type
+from .design import TableDesign
 
 
 def _spark_sql_type(col) -> str:

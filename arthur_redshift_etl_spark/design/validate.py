@@ -9,7 +9,7 @@ timestamp (:225-240).
 
 from __future__ import annotations
 
-from typing import Any, Dict, List
+from typing import Any, Dict
 
 from ..errors import TableDesignSemanticError, TableDesignSyntaxError
 from . import GENERIC_TYPES, TableDesign
@@ -130,8 +130,3 @@ def load_design(d: Dict[str, Any]) -> TableDesign:
     design = TableDesign.from_dict(d)
     validate_design_semantics(design)
     return design
-
-
-def validate_semantics_of_designs(designs: List[TableDesign]) -> None:
-    for design in designs:
-        validate_design_semantics(design)

@@ -12,10 +12,6 @@ class ETLError(Exception):
     """Base class for all engine errors."""
 
 
-class ETLSystemError(ETLError):
-    """Bug or misconfiguration in the engine itself."""
-
-
 class ETLConfigError(ETLError):
     """Invalid configuration, table design, or selection."""
 
@@ -78,8 +74,4 @@ class RequiredRelationLoadError(ETLRuntimeError):
 
 
 class DataUnloadError(ETLRuntimeError):
-    pass
-
-
-class UpstreamValidationError(ETLRuntimeError):
     pass

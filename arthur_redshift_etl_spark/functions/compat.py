@@ -435,36 +435,6 @@ def _rewrite_to_char(code: str) -> str:
         else:
             pos = i + 1
 
-# Leader-node-only functions the reference's explain lint flags
-# (explain.py:24-52) — they have no distributed equivalent in Redshift and
-# deserve review when migrating SQL; most ARE distributable in Spark.
-LEADER_ONLY_FUNCTIONS = (
-    "CURRENT_SCHEMA",
-    "CURRENT_SCHEMAS",
-    "AGE",
-    "NOW",
-    "ASCII",
-    "GET_BIT",
-    "GET_BYTE",
-    "OCTET_LENGTH",
-    "SET_BIT",
-    "SET_BYTE",
-    "TO_ASCII",
-)
-
-
-def lint_leader_only_functions(sql: str):
-    """Names of reference leader-only functions appearing in the SQL."""
-    found = []
-    for chunk, is_literal in _split_literals(sql):
-        if is_literal:
-            continue
-        for fn in LEADER_ONLY_FUNCTIONS:
-            if re.search(rf"\b{fn}\s*\(", chunk, re.I):
-                found.append(fn)
-    return sorted(set(found))
-
-
 def rewrite_redshift_sql(sql: str) -> str:
     """Rewrite Redshift-dialect SQL to Spark SQL, preserving string literals.
 

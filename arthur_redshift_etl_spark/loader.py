@@ -40,11 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .design import TableDesign
-from .errors import (
-    ETLRuntimeError,
-    FailedConstraintError,
-    RequiredRelationLoadError,
-)
+from .errors import ETLRuntimeError, RequiredRelationLoadError
 from .functions.compat import rewrite_redshift_sql
 from .monitor import STEP_LOAD, STEP_MAINTAIN, EventStore, Monitor
 from .names import TableName, TableSelector, as_backup, as_staging

@@ -10,7 +10,6 @@ Pure Python — no Spark dependency.
 from __future__ import annotations
 
 import fnmatch
-import re
 import uuid
 from typing import Iterable, Optional, Sequence
 
@@ -31,9 +30,6 @@ def as_backup(schema: str) -> str:
 
 def is_staging(schema: str) -> bool:
     return schema.startswith(STAGING_PREFIX)
-
-
-_IDENTIFIER_RE = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_]*$")
 
 
 class TableName:
@@ -201,8 +197,3 @@ class TableSelector:
 
     def __repr__(self) -> str:
         return f"TableSelector({self.patterns!r}, base_schemas={self._base_schemas!r})"
-
-
-def valid_identifier(name: str) -> bool:
-    """True if ``name`` is a plain SQL identifier (no quoting needed)."""
-    return bool(_IDENTIFIER_RE.match(name))

@@ -18,7 +18,7 @@ from typing import Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import as_double_array, dot, ivf_assign
+from .similarity import as_double_array, ivf_assign
 
 
 def recompute_centroids(

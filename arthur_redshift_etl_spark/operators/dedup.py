@@ -22,7 +22,6 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
-from pyspark.sql.window import Window
 
 from .text import tokens_col
 
@@ -215,23 +214,6 @@ def lsh_candidate_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-
-
-def jaccard_on_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_size: int = 3,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for given (id_a, id_b) pairs.
-
-    Computed set-algebraically on the distinct shingle sets
-    (|∩| via join-count; |∪| = |A| + |B| − |∩|) so it needs no array
-    materialization per pair.
-    """
-    toks = doc_shingles(df, id_col, text_col, shingle_size)
-    return jaccard_from_shingles(toks, pairs, id_col)
 
 
 def jaccard_from_shingles(
@@ -555,7 +537,6 @@ def containment_join(
     threshold: float = 0.8,
     min_size: int = 5,
     shingle_size: int = 3,
-    prefix_filter: bool = True,
 ) -> DataFrame:
     """EXACT directional containment join: every ordered pair (A, B),
     A != B, with |shingles(A) ∩ shingles(B)| / |shingles(A)| ≥ threshold
@@ -574,22 +555,11 @@ def containment_join(
     ones.  A one-sided size filter (|B| ≥ t·|A|) prunes further before
     exact verification.
 
-    ``prefix_filter`` is a measured regime knob, not a correctness one
-    (results are identical either way).  r12 measured the naive join 8×
-    faster on duplicate-saturated corpora (answer density ≈ candidate
-    density) and shipped False as the documented regime for them — but the
-    r13 rewrites (hash-keyed candidate stages, row-local prefix selection)
-    erased that crossover: re-measured on r14 code
-    (scripts/containment_auto_ab.py), the prefix path wins BOTH shapes —
-    4.0× on the sparse-answer sf0.1 corpus (7.45 s vs 30.06 s) and 3.7×
-    on the 20k-doc 4×-near-duplicate corpus (156.6 s vs 582.1 s), outputs
-    asserted identical.  An auto-select (VERDICT r13 #3) was therefore
-    built, measured, and DROPPED: there is no crossover left to arbitrate
-    (and the duplicated-occurrence stat it used mis-classifies
-    template-heavy corpora anyway — the sf0.1 documents table reads 999/1000
-    duplicated occurrences while prefix wins it 4×).  Keep True; False
-    remains only as the escape hatch for a future corpus that re-opens the
-    question, to be re-measured before use.
+    The prefix filter is the only regime.  The naive all-shared-shingle
+    join it replaced lost on both measured corpus shapes: 4.0× slower on the
+    sparse-answer sf0.1 corpus (30.06 s vs 7.45 s) and 3.7× slower on a
+    20k-doc 4×-near-duplicate corpus (582.1 s vs 156.6 s), with identical
+    outputs (OPTIMIZATION_r14.md §3).
 
     Returns (contained_id, container_id, inter_size, contained_size,
     containment_micro) with the ratio in exact integer micro-units —
@@ -617,43 +587,38 @@ def containment_join(
     # ceil(t*size) == (thr_micro*size + 999_999) div 1_000_000 exactly,
     # and thr_micro*size tops out at ~1e6 * |shingles|, far inside int64.
     thr_micro = int(round(threshold * 1_000_000))
-    if prefix_filter:
-        freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("doc_freq"))
-        prefix_len = (
-            F.col("set_size")
-            - F.expr(f"({thr_micro} * set_size + 999999) div 1000000")
-            + 1
+    freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("doc_freq"))
+    prefix_len = (
+        F.col("set_size")
+        - F.expr(f"({thr_micro} * set_size + 999999) div 1000000")
+        + 1
+    )
+    # Prefix selection by ROW-LOCAL sort (r13): collect each doc's
+    # (doc_freq, h) structs, sort_array + slice per row, explode the
+    # slice — identical output to the previous row_number window
+    # (asserted EXACT in scripts/prefix_rank_ab.py; same per-doc total
+    # order), but the partition-wide window SORT over every shingle
+    # row is replaced by bounded per-doc array sorts (median 0.99 s ->
+    # 0.82 s at sf0.1; the scaling argument — no full sort of the
+    # element table — is the larger point).
+    a_side = (
+        sh.select(id_col, "h")
+        .join(freq, "h")
+        .groupBy(id_col)
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct("doc_freq", "h"))
+            ).alias("o"),
+            F.count(F.lit(1)).alias("set_size"),
         )
-        # Prefix selection by ROW-LOCAL sort (r13): collect each doc's
-        # (doc_freq, h) structs, sort_array + slice per row, explode the
-        # slice — identical output to the previous row_number window
-        # (asserted EXACT in scripts/prefix_rank_ab.py; same per-doc total
-        # order), but the partition-wide window SORT over every shingle
-        # row is replaced by bounded per-doc array sorts (median 0.99 s ->
-        # 0.82 s at sf0.1; the scaling argument — no full sort of the
-        # element table — is the larger point).
-        a_side = (
-            sh.select(id_col, "h")
-            .join(freq, "h")
-            .groupBy(id_col)
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct("doc_freq", "h"))
-                ).alias("o"),
-                F.count(F.lit(1)).alias("set_size"),
-            )
-            .filter(F.col("set_size") >= min_size)
-            .select(
-                id_col,
-                F.explode(F.slice(F.col("o"), F.lit(1), prefix_len)).alias("e"),
-                "set_size",
-            )
-            .select(id_col, F.col("e.h").alias("h"), "set_size")
+        .filter(F.col("set_size") >= min_size)
+        .select(
+            id_col,
+            F.explode(F.slice(F.col("o"), F.lit(1), prefix_len)).alias("e"),
+            "set_size",
         )
-    else:
-        a_side = sh.select(id_col, "h").join(sizes, id_col).filter(
-            F.col("set_size") >= min_size
-        ).select(id_col, "h", "set_size")
+        .select(id_col, F.col("e.h").alias("h"), "set_size")
+    )
     a = a_side.select(
         F.col(id_col).alias("id_a"), "h", F.col("set_size").alias("size_a")
     )
@@ -663,9 +628,8 @@ def containment_join(
     cand = (
         a.join(b, "h")
         .filter(F.col("id_a") != F.col("id_b"))
-        # exact integer form of t*|A| <= |B| (both paths share this filter,
-        # so a float rounding here would be invisible to the prefix-vs-
-        # naive property test — keep it integer)
+        # exact integer form of t*|A| <= |B|: a float product here would
+        # over-prune exact-boundary pairs (see the micro-unit note above)
         .filter(F.expr(f"{thr_micro} * size_a <= size_b * 1000000"))
         .select("id_a", "id_b")
         .distinct()

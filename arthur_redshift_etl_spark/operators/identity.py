@@ -23,7 +23,7 @@ fine and fully deterministic.
 from __future__ import annotations
 
 import datetime
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F

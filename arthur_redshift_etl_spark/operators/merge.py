@@ -15,7 +15,7 @@ base table the anti join runs with zero exchanges on the base side.
 
 from __future__ import annotations
 
-from typing import List, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

@@ -21,7 +21,7 @@ bytes — both shapes are supported (``payload`` may be NULL with a
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, Optional
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

@@ -172,30 +172,6 @@ def pq_code(xm_col, codebooks: dict, m: int, sub: int):
     return F.when(best.getField("d").isNotNull(), best.getField("cid"))
 
 
-def pq_encode_expr(
-    df: DataFrame,
-    codebooks: dict,
-    n_subspaces: int,
-    sub_dims: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Expression-form PQ encode — the pre-r14 default, kept as the parity
-    reference for :func:`pq_encode_arrow` (tests pin multiset equality) and
-    as a no-Python fallback.  Measured 5.7-10x SLOWER than the Arrow form
-    at every corpus size (2k-640k vectors, scripts/pq_encode_arrow_ab.py):
-    the per-element interpreted zip_with/aggregate lambdas cost ~2-3 s even
-    on 2 000 rows, the exact interpreted-HOF tax guide §4.2 describes."""
-    base = df.select(F.col(id_col), micro_components(F.col(vec_col)).alias("xm"))
-    return base.select(
-        id_col,
-        *[
-            pq_code(F.col("xm"), codebooks, m, sub_dims).alias(f"code{m}")
-            for m in range(n_subspaces)
-        ],
-    )
-
-
 def pq_encode(
     df: DataFrame,
     codebooks: dict,
@@ -207,12 +183,11 @@ def pq_encode(
     """(id, code0..code{M-1}) — a pure map over the corpus (plan-pinned in
     test_plan_quality: no exchange, no join, no window).
 
-    r14: delegates to :func:`pq_encode_arrow` — byte-identical codes
-    (parity pinned in tests and at 640k-vector scale), measured 5.7x
-    faster at 2k vectors and 10.1x at 640k than the expression form
-    (scripts/pq_encode_arrow_ab.py; the r13 'below Arrow break-even'
-    sizing guess was wrong — the expression form's interpreted-HOF floor
-    is ~2-3 s at ANY size, guide §4.2)."""
+    r14: delegates to :func:`pq_encode_arrow` — byte-identical codes to
+    the :func:`pq_code` expression form (parity pinned in
+    tests/test_pii_quantization.py), measured 5.7x faster at 2k vectors and
+    10.1x at 640k (OPTIMIZATION_r14.md; the expression form's
+    interpreted-HOF floor is ~2-3 s at ANY size, guide §4.2)."""
     return pq_encode_arrow(
         df, codebooks, n_subspaces, sub_dims, id_col, vec_col
     )
@@ -241,8 +216,7 @@ def pq_encode_arrow(
       codebook axis is ordered by ascending centroid id — identical to the
       expression form's lexicographic ``array_min`` over (d, cid) structs.
 
-    Parity is pinned by test + scripts/pq_encode_arrow_ab.py (multiset
-    equality at enlarged scale).
+    Parity with the expression form is pinned by test (multiset equality).
     """
     import numpy as np
     from pyspark.sql.types import IntegerType, StructField, StructType

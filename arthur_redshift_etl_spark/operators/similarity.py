@@ -17,8 +17,6 @@ sort).
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column

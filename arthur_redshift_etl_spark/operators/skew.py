@@ -14,8 +14,6 @@ Result is identical to the plain join; the hot key's rows spread over
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 

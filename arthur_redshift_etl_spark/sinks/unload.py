@@ -8,15 +8,14 @@ orchestration in ``unload.py:40-169`` which also writes ``columns.yaml`` and
 
 from __future__ import annotations
 
-import json
 import os
-from typing import List, Optional
+from typing import List
 
 from pyspark.sql import DataFrame
 
 from ..design import TableDesign
 from ..errors import DataUnloadError
-from ..sources.files import CSV_WRITE_OPTIONS, list_part_files, write_manifest
+from ..sources.files import CSV_WRITE_OPTIONS, write_manifest
 
 
 def write_columns_yaml(path: str, columns: List[str]) -> str:

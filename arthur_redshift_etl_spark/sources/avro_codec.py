@@ -492,13 +492,3 @@ def spark_schema_from_avro(schema: dict):
     if _schema_type(schema) != "record":
         raise AvroCodecError("top-level Avro schema must be a record")
     return convert(schema)
-
-
-def write_file(path: str, rows, schema: dict, codec: str = "deflate") -> int:
-    with open(path, "wb") as fh:
-        return write_container(fh, rows, schema, codec=codec)
-
-
-def read_file(path: str) -> Tuple[dict, List[Tuple[Any, ...]]]:
-    with open(path, "rb") as fh:
-        return read_container(fh.read())

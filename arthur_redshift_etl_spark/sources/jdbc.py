@@ -21,10 +21,9 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass
-from typing import List, Optional, Sequence, Tuple
+from typing import List, Optional
 
 from ..design import TableDesign
-from ..errors import ETLConfigError
 
 logger = logging.getLogger(__name__)
 

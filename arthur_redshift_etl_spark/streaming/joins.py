@@ -4,8 +4,8 @@ The reference has no streaming at all (README: "Arthur is not designed to
 support streaming or micro-batch ETLs"); its join surface is batch SQL in
 transform files.  This module is the streaming half of that join surface:
 the interval-join shape the batch catalog already proves
-(``bucketed_interval_join`` / as-of joins in ``workload.py``) expressed as
-an incremental Structured Streaming join with bounded state.
+(``bucketed_interval_join`` / as-of joins in the ``workload`` catalog)
+expressed as an incremental Structured Streaming join with bounded state.
 
 Why the time-range condition is not optional
 --------------------------------------------

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import difflib
 import logging
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import List, Optional, Sequence
 
 from pyspark.sql import SparkSession

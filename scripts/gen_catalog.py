@@ -35,7 +35,8 @@ FAMILIES = [
 ]
 
 
-def main() -> None:
+def render() -> str:
+    """CATALOG.md's text for the live registry."""
     entries = dict(sorted(REGISTRY.items()))
     n_oracle = sum(1 for s in entries.values() if s.oracle)
     n_rest = len(entries) - n_oracle
@@ -69,9 +70,14 @@ def main() -> None:
             d = " ".join((s.description or "").split())
             lines.append(f"| `{n}` | {'SQL' if s.oracle else 'invariants'} | {d} |")
         lines.append("")
+    return "\n".join(lines)
+
+
+def main() -> None:
     with open("CATALOG.md", "w") as f:
-        f.write("\n".join(lines))
-    print(f"CATALOG.md: {len(entries)} entries, {n_oracle} oracles")
+        f.write(render())
+    n_oracle = sum(1 for s in REGISTRY.values() if s.oracle)
+    print(f"CATALOG.md: {len(REGISTRY)} entries, {n_oracle} oracles")
 
 
 if __name__ == "__main__":

@@ -157,7 +157,7 @@ def main() -> int:
                     # force the measured auto-broadcast fallback: node
                     # tables join shuffle-side co-partitioned on src —
                     # the plan a 100-TB node table would get
-                    from arthur_redshift_etl_spark import workload as wl
+                    from arthur_redshift_etl_spark.workload import lm_quality as wl
 
                     saved = wl.PAGERANK_NODE_BCAST_LIMIT_BYTES
                     wl.PAGERANK_NODE_BCAST_LIMIT_BYTES = 0

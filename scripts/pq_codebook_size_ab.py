@@ -21,14 +21,14 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark.operators import quantization as qz  # noqa: E402
 from arthur_redshift_etl_spark.session import build_session  # noqa: E402
-from arthur_redshift_etl_spark.workload import (  # noqa: E402
+from arthur_redshift_etl_spark.workload import t  # noqa: E402
+from arthur_redshift_etl_spark.workload.pq import (  # noqa: E402
     PQ_BIG_K,
     PQ_BIG_M,
     PQ_BIG_SUB,
     PQ_K,
     PQ_M,
     PQ_SUB,
-    t,
 )
 
 CONFIGS = {

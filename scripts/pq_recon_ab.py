@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
+from arthur_redshift_etl_spark.workload import estimation, pq  # noqa: E402
 from arthur_redshift_etl_spark.operators import quantization as qz  # noqa: E402
 from arthur_redshift_etl_spark.session import build_session, default_cpus  # noqa: E402
 
@@ -40,10 +41,10 @@ def main() -> None:
         extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "8g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    PQ_M, PQ_SUB, PQ_K = workload.PQ_M, workload.PQ_SUB, workload.PQ_K
+    PQ_M, PQ_SUB, PQ_K = pq.PQ_M, pq.PQ_SUB, pq.PQ_K
 
     def shipped():
-        return workload.pq_reconstruction_error(spark, sf_dir)
+        return estimation.pq_reconstruction_error(spark, sf_dir)
 
     def single_scan():
         emb = workload.t(spark, sf_dir, "embeddings")

@@ -32,16 +32,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark import workload  # noqa: E402
+from arthur_redshift_etl_spark.workload import pq  # noqa: E402
 from arthur_redshift_etl_spark.operators import quantization as qz  # noqa: E402
 from arthur_redshift_etl_spark.session import build_session  # noqa: E402
 
 COPIES = int(os.environ.get("SPARK_GRAFT_PQ_COPIES", "320"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 M, SUB, K, QUERY_ID = (
-    workload.PQ_M,
-    workload.PQ_SUB,
-    workload.PQ_K,
-    workload.PQ_QUERY_ID,
+    pq.PQ_M,
+    pq.PQ_SUB,
+    pq.PQ_K,
+    pq.PQ_QUERY_ID,
 )
 
 

@@ -21,7 +21,8 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark.operators import quantization as qz  # noqa: E402
 from arthur_redshift_etl_spark.session import build_session  # noqa: E402
-from arthur_redshift_etl_spark.workload import PQ_K, PQ_M, PQ_SUB, t  # noqa: E402
+from arthur_redshift_etl_spark.workload import t  # noqa: E402
+from arthur_redshift_etl_spark.workload.pq import PQ_K, PQ_M, PQ_SUB  # noqa: E402
 
 
 def adc_top10(coded, lut):

@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from arthur_redshift_etl_spark.session import build_session  # noqa: E402
-from arthur_redshift_etl_spark.workload import (  # noqa: E402
+from arthur_redshift_etl_spark.workload.recall_sources import (  # noqa: E402
     _duckdb_mirror,
     _sqlite_mirror,
 )

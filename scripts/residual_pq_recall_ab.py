@@ -27,7 +27,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from arthur_redshift_etl_spark.operators import quantization as qz  # noqa: E402
 from arthur_redshift_etl_spark.operators import similarity as sim  # noqa: E402
 from arthur_redshift_etl_spark.session import build_session  # noqa: E402
-from arthur_redshift_etl_spark.workload import PQ_K, PQ_M, PQ_SUB, t  # noqa: E402
+from arthur_redshift_etl_spark.workload import t  # noqa: E402
+from arthur_redshift_etl_spark.workload.pq import PQ_K, PQ_M, PQ_SUB  # noqa: E402
 
 
 def main():

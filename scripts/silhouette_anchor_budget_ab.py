@@ -17,7 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from arthur_redshift_etl_spark import workload  # noqa: E402
+from arthur_redshift_etl_spark.workload import cluster_eval, t  # noqa: E402
 from arthur_redshift_etl_spark.session import build_session  # noqa: E402
 
 BUDGETS = (32, 128, 512)
@@ -37,18 +37,18 @@ def main() -> None:
         extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "16g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    default = workload.SIL_ANCHOR_BUDGET
+    default = cluster_eval.SIL_ANCHOR_BUDGET
     out = {}
     try:
         for sf in TIERS:
-            workload.t(spark, sf, "embeddings").count()
+            t(spark, sf, "embeddings").count()
             tier = {}
             for budget in BUDGETS:
-                workload.SIL_ANCHOR_BUDGET = budget
+                cluster_eval.SIL_ANCHOR_BUDGET = budget
                 cell = {}
                 for tag, fn in (
-                    ("init", workload.kmeans_silhouette_eval),
-                    ("trained", workload.kmeans_trained_silhouette),
+                    ("init", cluster_eval.kmeans_silhouette_eval),
+                    ("trained", cluster_eval.kmeans_trained_silhouette),
                 ):
                     fn(spark, sf).count()  # warm
                     t0 = time.time()
@@ -61,7 +61,7 @@ def main() -> None:
                 tier[f"budget_{budget}"] = cell
             out[os.path.basename(sf)] = tier
     finally:
-        workload.SIL_ANCHOR_BUDGET = default
+        cluster_eval.SIL_ANCHOR_BUDGET = default
     print(json.dumps(out))
     spark.stop()
 

@@ -221,11 +221,14 @@ def test_catalog_md_in_sync_with_registry():
     """CATALOG.md is derived from workload.REGISTRY (scripts/gen_catalog.py);
     a stale count means an entry shipped without regenerating the index —
     exactly the round-4 end-of-round failure mode.  Pin the count so
-    staleness is a test failure, not a judge finding."""
+    staleness is a test failure, not a judge finding, and the whole text, so
+    an edited description is one too."""
+    import importlib.util
     import re
     from pathlib import Path
 
-    text = Path(__file__).resolve().parents[1].joinpath("CATALOG.md").read_text()
+    root = Path(__file__).resolve().parents[1]
+    text = root.joinpath("CATALOG.md").read_text()
     m = re.search(r"^(\d+) entries[;,]", text, re.M)
     assert m, "CATALOG.md missing the '<N> entries' header line"
     assert int(m.group(1)) == len(REGISTRY), (
@@ -235,3 +238,9 @@ def test_catalog_md_in_sync_with_registry():
     # every registry name must appear in the index table
     missing = [n for n in REGISTRY if f"`{n}`" not in text]
     assert not missing, f"CATALOG.md missing entries: {missing[:5]}"
+    spec = importlib.util.spec_from_file_location(
+        "gen_catalog", root / "scripts" / "gen_catalog.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    assert text == gen.render(), "CATALOG.md is stale — re-run scripts/gen_catalog.py"

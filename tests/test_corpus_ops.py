@@ -184,7 +184,7 @@ def test_mix_epochs_exact_beyond_int64(spark, tmp_path):
     the old path produced garbage."""
     import math
 
-    from arthur_redshift_etl_spark import workload
+    from arthur_redshift_etl_spark.workload import training
 
     rows = [
         # (doc_id, text, lang, source, n_chars) — 6e8 total chars
@@ -218,7 +218,7 @@ def test_mix_epochs_exact_beyond_int64(spark, tmp_path):
             r["achieved_chars"],
             r["shortfall_chars"],
         )
-        for r in workload.corpus_mix_epochs(spark, str(tmp_path)).collect()
+        for r in training.corpus_mix_epochs(spark, str(tmp_path)).collect()
     }
     assert out == expect
     assert all(v[1] > 0 for v in out.values())  # the wrap produced negatives
@@ -231,7 +231,7 @@ def test_temperature_mix_quota_exact_beyond_int64(spark, tmp_path):
     scale where int64 would wrap."""
     import math
 
-    from arthur_redshift_etl_spark import workload
+    from arthur_redshift_etl_spark.workload import training
 
     # few docs, astronomically heavy: forces w_int ~ 3.1e13 so that even a
     # tiny n_target (2 docs per source here is irrelevant — the product
@@ -271,7 +271,7 @@ def test_temperature_mix_quota_exact_beyond_int64(spark, tmp_path):
     }
 
     out = (
-        workload.corpus_temperature_mix(spark, str(tmp_path))
+        training.corpus_temperature_mix(spark, str(tmp_path))
         .groupBy("source")
         .count()
         .collect()

@@ -904,15 +904,38 @@ def test_containment_join_prefix_equals_naive(spark):
     assert planted <= found_directed
 
 
-def test_containment_join_regimes_identical_on_both_corpus_shapes(spark):
-    """Both prefix_filter regimes must return identical rows on BOTH corpus
-    shapes — the sparse-answer shape the planted test above covers AND the
-    duplicate-saturated shape (4x near-copies) where r12 shipped the naive
-    regime.  r14 re-measured the regimes at scale and dropped the r12
-    crossover claim (prefix now wins both shapes,
-    scripts/containment_auto_ab.py); this test keeps the False escape
-    hatch row-identical so that re-opening the regime question is a pure
-    performance measurement."""
+def _containment_reference(df, threshold, min_size):
+    """Exact Python set reference: every (contained, container, inter) with
+    |A ∩ B| / |A| >= threshold and |A| >= min_size."""
+    sets = {}
+    for r in dd.doc_shingles(df, "doc_id", "text").distinct().collect():
+        sets.setdefault(r["doc_id"], set()).add(r["shingle"])
+    thr_micro = int(round(threshold * 1_000_000))
+    return {
+        (a, b, len(sa & sb))
+        for a, sa in sets.items()
+        if len(sa) >= min_size
+        for b, sb in sets.items()
+        if a != b and len(sa & sb) * 1_000_000 // len(sa) >= thr_micro
+    }
+
+
+def _containment_rows(df, threshold, min_size):
+    return {
+        tuple(r)
+        for r in dd.containment_join(
+            df, "doc_id", "text", threshold=threshold, min_size=min_size
+        )
+        .select("contained_id", "container_id", "inter_size")
+        .collect()
+    }
+
+
+def test_containment_join_exact_on_both_corpus_shapes(spark):
+    """The prefix-filtered join equals the exact set reference on BOTH
+    corpus shapes: the sparse-answer shape with planted supersets, and the
+    duplicate-saturated shape (4x near-copies), where answer density is
+    close to candidate density."""
     import random
 
     rng = random.Random(11)
@@ -938,22 +961,16 @@ def test_containment_join_regimes_identical_on_both_corpus_shapes(spark):
         ["doc_id", "text"],
     )
     for df in (sparse, saturated):
-        results = {}
-        for pf in (True, False):
-            out = dd.containment_join(
-                df, "doc_id", "text", threshold=0.8, min_size=5,
-                prefix_filter=pf,
-            )
-            results[pf] = sorted(tuple(r) for r in out.collect())
-            spark.catalog.clearCache()
-        assert results[True] == results[False]
-        assert results[True], "corpus produced no pairs — test is vacuous"
+        got = _containment_rows(df, 0.8, 5)
+        spark.catalog.clearCache()
+        assert got == _containment_reference(df, 0.8, 5)
+        assert got, "corpus produced no pairs — test is vacuous"
 
 
 def test_containment_join_property_random(spark):
     """Property sweep: across several random corpora and thresholds, the
-    prefix-filtered containment join equals the naive reference exactly
-    (the single-seed planted test above pins one corpus; this pins the
+    prefix-filtered containment join equals the exact set reference (the
+    single-seed planted test above pins one corpus; this pins the
     parameter space)."""
     import random
 
@@ -965,71 +982,34 @@ def test_containment_join_property_random(spark):
             for i in range(40)
         ]
         df = spark.createDataFrame(rows, ["doc_id", "text"])
-        got = {
-            tuple(r)
-            for r in dd.containment_join(
-                df, "doc_id", "text", threshold=thr, min_size=4
-            )
-            .select("contained_id", "container_id", "inter_size")
-            .collect()
-        }
-        sh = dd.doc_shingles(df, "doc_id", "text").distinct()
-        sets = {}
-        for r in sh.collect():
-            sets.setdefault(r["doc_id"], set()).add(r["shingle"])
-        thr_micro = int(thr * 1_000_000)
-        want = {
-            (a, b, len(sa & sb))
-            for a, sa in sets.items()
-            if len(sa) >= 4
-            for b, sb in sets.items()
-            if a != b and len(sa & sb) * 1_000_000 // len(sa) >= thr_micro
-        }
-        assert got == want, (seed, thr)
-        # the duplicate-saturated-regime path (prefix_filter=False) must
-        # return the identical rows — it is a cost knob, not a semantic one
-        got_naive = {
-            tuple(r)
-            for r in dd.containment_join(
-                df, "doc_id", "text", threshold=thr, min_size=4,
-                prefix_filter=False,
-            )
-            .select("contained_id", "container_id", "inter_size")
-            .collect()
-        }
-        assert got_naive == want, (seed, thr, "prefix_filter=False")
+        got = _containment_rows(df, thr, 4)
+        assert got == _containment_reference(df, thr, 4), (seed, thr)
 
 
 def test_containment_join_exact_boundary_threshold(spark):
     """ADVICE r12 regression: thresholds whose double product rounds up
     past the exact integer (0.56 at 25 shingles: 0.56*25 =
     14.000000000000002) must NOT over-prune exact-boundary pairs.  The
-    old float size filter t*|A| <= |B| dropped the pair below in BOTH
-    prefix paths (so the prefix-vs-naive property test could not see
-    it); the integer micro-unit form keeps it.
+    old float size filter t*|A| <= |B| dropped the pair below; the
+    integer micro-unit form keeps it.
 
     Construction: A has 25 distinct 3-shingles (27 distinct words); B is
-    A's first 16 words, so |B| = 14, B ⊂ A shingle-wise, inter = 14,
-    C(B→A) = 14/14 = 1.0 and the boundary case C(A→B)... — careful:
-    containment is directional on the CONTAINED side's size, so the
-    boundary pair is (contained=A, container=B)?  No: C(A→B) =
+    A's first 16 words, so |B| = 14 and B ⊂ A shingle-wise.  C(A→B) =
     |A∩B|/|A| = 14/25 = 0.56 exactly, with |B| = 14 sitting exactly on
-    the size filter t*|A| <= |B| boundary (0.56*25 = 14)."""
+    the size filter t*|A| <= |B| boundary (0.56*25 = 14); C(B→A) = 1.0."""
     words = [f"u{i}" for i in range(27)]
     doc_a = " ".join(words)            # 25 distinct shingles
     doc_b = " ".join(words[:16])       # 14 distinct shingles, all in A
     df = spark.createDataFrame([(1, doc_a), (2, doc_b)], ["doc_id", "text"])
-    for pf in (True, False):
-        got = {
-            (r["contained_id"], r["container_id"], r["containment_micro"])
-            for r in dd.containment_join(
-                df, "doc_id", "text", threshold=0.56, min_size=5,
-                prefix_filter=pf,
-            ).collect()
-        }
-        # (A contained in B at exactly 0.56) and (B fully contained in A)
-        assert (1, 2, 560000) in got, (pf, got)
-        assert (2, 1, 1000000) in got, (pf, got)
+    got = {
+        (r["contained_id"], r["container_id"], r["containment_micro"])
+        for r in dd.containment_join(
+            df, "doc_id", "text", threshold=0.56, min_size=5
+        ).collect()
+    }
+    # (A contained in B at exactly 0.56) and (B fully contained in A)
+    assert (1, 2, 560000) in got, got
+    assert (2, 1, 1000000) in got, got
 
 
 def test_ngram_jaccard_exact_boundary_threshold(spark):

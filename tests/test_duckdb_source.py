@@ -408,7 +408,7 @@ def test_change_feed_start_cursor_never_rewinds(registered, tmp_path):
 def _engine(name, duck_path):
     """(source module, orders upstream path) for one key-range engine."""
     from arthur_redshift_etl_spark.sources import duckdb_source, sqlite_source
-    from arthur_redshift_etl_spark.workload import _sqlite_mirror
+    from arthur_redshift_etl_spark.workload.recall_sources import _sqlite_mirror
 
     if name == "duckdb":
         return duckdb_source, duck_path
@@ -857,7 +857,7 @@ def test_mirror_cache_rebuilds_when_parquet_changes(tmp_path):
     import os
     import shutil
 
-    from arthur_redshift_etl_spark.workload import _duckdb_mirror
+    from arthur_redshift_etl_spark.workload.recall_sources import _duckdb_mirror
 
     sf_dir = tmp_path / "sf"
     sf_dir.mkdir()
@@ -1167,7 +1167,7 @@ def test_entry_self_diagnosis_fires_on_divergent_mirror(registered, tmp_path):
     import os
     import shutil
 
-    from arthur_redshift_etl_spark import workload
+    from arthur_redshift_etl_spark.workload import recall_sources
 
     sf_dir = tmp_path / "sf"
     sf_dir.mkdir()
@@ -1188,17 +1188,17 @@ def test_entry_self_diagnosis_fires_on_divergent_mirror(registered, tmp_path):
     con.close()
     st = os.stat(src)
     key = (os.path.abspath(src), st.st_mtime_ns, st.st_size)
-    workload._DUCKDB_MIRROR_MEMO[key] = str(bad)
+    recall_sources._DUCKDB_MIRROR_MEMO[key] = str(bad)
     try:
         with pytest.raises(RuntimeError) as exc:
-            workload.duckdb_source_orders_by_status(registered, str(sf_dir))
+            recall_sources.duckdb_source_orders_by_status(registered, str(sf_dir))
         msg = str(exc.value)
         assert "duckdb_source divergence" in msg
         assert "datasource=" in msg and "parquet=" in msg
         assert "mirror=" in msg and "duckdb=" in msg
         assert "ds_partition_counts=" in msg
     finally:
-        workload._DUCKDB_MIRROR_MEMO.pop(key, None)
+        recall_sources._DUCKDB_MIRROR_MEMO.pop(key, None)
 
 
 def test_entry_green_path_uses_process_scoped_mirror(registered, tmp_path):
@@ -1207,12 +1207,12 @@ def test_entry_green_path_uses_process_scoped_mirror(registered, tmp_path):
     parquet aggregate."""
     import shutil
 
-    from arthur_redshift_etl_spark import workload
+    from arthur_redshift_etl_spark.workload import recall_sources
 
     sf_dir = tmp_path / "sf"
     sf_dir.mkdir()
     shutil.copy(f"{SF}/orders.parquet", sf_dir / "orders.parquet")
-    out = workload.duckdb_source_orders_by_status(registered, str(sf_dir))
+    out = recall_sources.duckdb_source_orders_by_status(registered, str(sf_dir))
     rows = {tuple(map(str, r)) for r in out.collect()}
     ref = {
         tuple(map(str, r))
@@ -1229,11 +1229,11 @@ def test_entry_green_path_uses_process_scoped_mirror(registered, tmp_path):
     }
     assert rows == ref
     # the mirror path is process-unique (contains this pid) and memoized
-    mirror = workload._duckdb_mirror(str(sf_dir))
+    mirror = recall_sources._duckdb_mirror(str(sf_dir))
     import os
 
     assert f"_{os.getpid()}_" in os.path.basename(mirror)
-    assert workload._duckdb_mirror(str(sf_dir)) == mirror
+    assert recall_sources._duckdb_mirror(str(sf_dir)) == mirror
 
 
 def test_entry_returns_literalized_tri_checked_rows(registered, tmp_path):
@@ -1243,12 +1243,12 @@ def test_entry_returns_literalized_tri_checked_rows(registered, tmp_path):
     red driver row can only mean the driver's oracle side."""
     import shutil
 
-    from arthur_redshift_etl_spark import workload
+    from arthur_redshift_etl_spark.workload import recall_sources
 
     sf_dir = tmp_path / "sf"
     sf_dir.mkdir()
     shutil.copy(f"{SF}/orders.parquet", sf_dir / "orders.parquet")
-    out = workload.duckdb_source_orders_by_status(registered, str(sf_dir))
+    out = recall_sources.duckdb_source_orders_by_status(registered, str(sf_dir))
     plan = out._jdf.queryExecution().executedPlan().toString()
     # createDataFrame(rows) plans as a parallelized-rows scan: either
     # LocalTableScan or Scan ExistingRDD depending on the conversion path —

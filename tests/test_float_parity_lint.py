@@ -10,16 +10,18 @@ red driver row (``duckdb_source_orders_by_status``) slipped a raw-double
 SUM past review; this lint makes the convention a gate.
 
 Scope: every ``F.sum``/``F.avg``/``F.mean``/``F.sum_distinct`` call in
-``workload.py`` whose argument references a known floating-point source
-column must contain a ``.cast(...)`` or ``dec(...)`` in the argument
-subtree.  Window/grouped contexts are included (the hazard is the same).
+the catalog package (every ``.py`` file under ``workload/``) whose argument
+references a known floating-point source column must contain a
+``.cast(...)`` or ``dec(...)`` in the argument subtree.  Window/grouped
+contexts are included (the hazard is the same).
 """
 
 import ast
+import glob
 import os
 
-WORKLOAD = os.path.join(
-    os.path.dirname(__file__), "..", "arthur_redshift_etl_spark", "workload.py"
+WORKLOAD_DIR = os.path.join(
+    os.path.dirname(__file__), "..", "arthur_redshift_etl_spark", "workload"
 )
 
 # Floating-point columns of the test tables (parquet physical DOUBLE/FLOAT).
@@ -73,21 +75,10 @@ def _has_exact_cast(node):
     return False
 
 
-def test_no_order_dependent_double_aggregates():
-    with open(WORKLOAD) as fh:
-        src = fh.read()
-    tree = ast.parse(src)
-
-    # map line -> enclosing top-level function name for the allowlist
-    func_of_line = {}
-    for node in tree.body:
-        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            for ln in range(node.lineno, (node.end_lineno or node.lineno) + 1):
-                func_of_line[ln] = node.name
-
-    offenders = []
+def _aggregate_calls(tree):
+    """Every F.sum/F.avg/F.mean/F.sum_distinct call with an argument."""
     for n in ast.walk(tree):
-        if not (
+        if (
             isinstance(n, ast.Call)
             and isinstance(n.func, ast.Attribute)
             and n.func.attr in ORDER_SENSITIVE_AGGS
@@ -95,19 +86,42 @@ def test_no_order_dependent_double_aggregates():
             and n.func.value.id == "F"
             and n.args
         ):
-            continue
-        arg = n.args[0]
-        touched = _columns_referenced(arg) & DOUBLE_COLUMNS
-        if not touched or _has_exact_cast(arg):
-            continue
-        fn = func_of_line.get(n.lineno, "?")
-        if fn in ALLOWED:
-            continue
-        offenders.append(
-            f"workload.py:{n.lineno} ({fn}): F.{n.func.attr} over raw "
-            f"double column(s) {sorted(touched)} — cast to decimal/int "
-            f"inside the aggregate (dec() helper) for order-free parity"
-        )
+            yield n
+
+
+def test_no_order_dependent_double_aggregates():
+    paths = sorted(glob.glob(os.path.join(WORKLOAD_DIR, "*.py")))
+    # a wrong directory would otherwise pass without checking anything
+    assert paths, f"no catalog module under {WORKLOAD_DIR}"
+
+    offenders = []
+    call_sites = 0
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        # map line -> enclosing top-level function name for the allowlist
+        func_of_line = {}
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                for ln in range(node.lineno, (node.end_lineno or node.lineno) + 1):
+                    func_of_line[ln] = node.name
+
+        for n in _aggregate_calls(tree):
+            call_sites += 1
+            arg = n.args[0]
+            touched = _columns_referenced(arg) & DOUBLE_COLUMNS
+            if not touched or _has_exact_cast(arg):
+                continue
+            fn = func_of_line.get(n.lineno, "?")
+            if fn in ALLOWED:
+                continue
+            offenders.append(
+                f"{os.path.basename(path)}:{n.lineno} ({fn}): F.{n.func.attr} "
+                f"over raw double column(s) {sorted(touched)} — cast to "
+                f"decimal/int inside the aggregate (dec() helper) for "
+                f"order-free parity"
+            )
+    assert call_sites, f"no F.sum/F.avg call site in {len(paths)} modules"
     assert not offenders, "\n".join(offenders)
 
 

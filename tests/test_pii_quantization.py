@@ -137,13 +137,27 @@ def test_forget_rows_matches_filter_semantics_random(spark):
         assert audit["residual_matches"] == 0
 
 
+def pq_encode_expr(df, codebooks, n_subspaces, sub_dims):
+    """Expression-form PQ encode: one :func:`qz.pq_code` per subspace over
+    the micro-unit components, the parity reference for pq_encode_arrow."""
+    base = df.select("vec_id", qz.micro_components(F.col("embedding")).alias("xm"))
+    return base.select(
+        "vec_id",
+        *[
+            qz.pq_code(F.col("xm"), codebooks, m, sub_dims).alias(f"code{m}")
+            for m in range(n_subspaces)
+        ],
+    )
+
+
 def test_pq_encode_arrow_matches_expression(spark):
     """pq_encode_arrow (guide §4.2 numpy batch path) must produce
     byte-identical codes to the expression encoder — including argmin
     tie-breaks (np.argmin first-min vs lexicographic (d, cid) array_min)
     and the IEEE floor(x*1e6) micro-unit cast.  sf0.001 corpus + planted
     exact-tie rows (a vector equal to a centroid midpoint region repeats)."""
-    from arthur_redshift_etl_spark.workload import PQ_K, PQ_M, PQ_SUB, t
+    from arthur_redshift_etl_spark.workload import t
+    from arthur_redshift_etl_spark.workload.pq import PQ_K, PQ_M, PQ_SUB
 
     emb = t(spark, "/root/testdata/sf0.001", "embeddings")
     # plant exact ties: duplicate the centroid rows themselves (distance 0
@@ -185,7 +199,7 @@ def test_pq_encode_arrow_matches_expression(spark):
         )
     int_ids = int_ids.unionAll(null_row).unionAll(holed)
     for df in (corpus, int_ids):
-        a = qz.pq_encode_expr(df, codebooks, PQ_M, PQ_SUB)
+        a = pq_encode_expr(df, codebooks, PQ_M, PQ_SUB)
         b = qz.pq_encode_arrow(df, codebooks, PQ_M, PQ_SUB)
         assert a.schema == b.schema
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0

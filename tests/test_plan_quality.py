@@ -337,7 +337,7 @@ def test_pagerank_shuffle_fallback_same_answer(spark, monkeypatch):
     # force the over-budget branch: the per-iteration joins must fall back
     # to co-partitioned shuffle joins (the only correct plan when the node
     # table is billions of rows) and produce the identical ranking
-    from arthur_redshift_etl_spark import workload
+    from arthur_redshift_etl_spark.workload import lm_quality
 
     def norm(rows):
         # driver float protocol: 10 significant digits (summation order
@@ -347,16 +347,16 @@ def test_pagerank_shuffle_fallback_same_answer(spark, monkeypatch):
             for r in rows
         )
 
-    base = workload.REGISTRY["pagerank_two_iterations"].fn(spark, SF)
+    base = REGISTRY["pagerank_two_iterations"].fn(spark, SF)
     want = norm(map(tuple, base.collect()))
-    monkeypatch.setattr(workload, "PAGERANK_NODE_BCAST_LIMIT_BYTES", 0)
+    monkeypatch.setattr(lm_quality, "PAGERANK_NODE_BCAST_LIMIT_BYTES", 0)
     # also silence the planner's own stats-driven broadcast (at sf0.001 the
     # node tables really are tiny; at 100 TB neither the hint nor the stats
     # would pick broadcast)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = workload.REGISTRY["pagerank_two_iterations"].fn(spark, SF)
+        df = REGISTRY["pagerank_two_iterations"].fn(spark, SF)
         p = plan_text(df)
         assert "CartesianProduct" not in p, p
         assert "SortMergeJoin" in p or "ShuffledHashJoin" in p, p

@@ -1,5 +1,6 @@
 """Salted-join correctness + vectorized kNN equivalence/speed."""
 
+import re
 import time
 
 import pytest
@@ -8,8 +9,14 @@ from pyspark.sql import functions as F
 from arthur_redshift_etl_spark.operators.similarity import brute_force_knn
 from arthur_redshift_etl_spark.operators.skew import detect_skewed_keys, salted_join
 from arthur_redshift_etl_spark.operators.vectorized import brute_force_knn_vectorized
+from arthur_redshift_etl_spark.plans.lint import plan_text
 
 SF = "/root/testdata/sf0.001"
+
+
+def plan_shape(df):
+    """The plans without expression and exchange ids, which differ per build."""
+    return re.sub(r"#\d+L?|plan_id=\d+", "", plan_text(df, "extended"))
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -391,18 +398,22 @@ def test_pareto_frontier_equals_bruteforce_dominance(spark):
 def test_peak_concurrency_two_pass_fallback_matches_packed(spark, monkeypatch):
     """Shrinking PEAK_PACK_BASE forces the two-running-sum fallback; both
     paths must agree with each other (and the packed path with a naive
-    sweep) on the same data."""
-    from arthur_redshift_etl_spark import workload
+    sweep) on the same data.  The plans must differ, or the patch missed
+    and the "fallback" was the packed path again."""
+    from arthur_redshift_etl_spark.workload import recall_sources, t
 
     sf = "/root/testdata/sf0.001"
-    packed = workload.peak_concurrent_sessions(spark, sf).collect()[0]
+    packed_df = recall_sources.peak_concurrent_sessions(spark, sf)
+    packed = packed_df.collect()[0]
 
-    monkeypatch.setattr(workload, "PEAK_PACK_BASE", 1)
-    fallback = workload.peak_concurrent_sessions(spark, sf).collect()[0]
+    monkeypatch.setattr(recall_sources, "PEAK_PACK_BASE", 1)
+    fallback_df = recall_sources.peak_concurrent_sessions(spark, sf)
+    fallback = fallback_df.collect()[0]
     assert packed == fallback
+    assert plan_shape(packed_df) != plan_shape(fallback_df)
 
     # naive sweep on the driver (sf0.001 is tiny)
-    ev = workload.t(spark, sf, "events").select("user_id", "ts").collect()
+    ev = t(spark, sf, "events").select("user_id", "ts").collect()
     iv = {}
     for r in ev:
         key = (r["user_id"], r["ts"].date())
@@ -468,7 +479,7 @@ def test_peak_concurrency_property_random_intervals(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from arthur_redshift_etl_spark import workload
+    from arthur_redshift_etl_spark.workload import recall_sources
 
     base = datetime.datetime(2024, 3, 1)
     events_strategy = st.lists(
@@ -497,7 +508,7 @@ def test_peak_concurrency_property_random_intervals(spark, tmp_path):
             "event_id long, ts timestamp_ntz, user_id long, "
             "event_type string, value double, props string",
         ).write.mode("overwrite").parquet(f"{d}/events.parquet")
-        got = workload.peak_concurrent_sessions(spark, d).collect()[0]
+        got = recall_sources.peak_concurrent_sessions(spark, d).collect()[0]
 
         iv = {}
         for _, ts, u, *_ in rows:
@@ -532,7 +543,7 @@ def test_ivfpq_recall_monotone_in_nprobe(spark):
     top-10 (observed at sf0.01: nprobe 1 -> 2 drops ADC recall 0.2 ->
     0.1 while candidate recall rises).  ADC recall is bounded above by
     candidate recall: a neighbor can only be ADC-ranked if probed."""
-    from arthur_redshift_etl_spark.workload import ivfpq_recall_eval
+    from arthur_redshift_etl_spark.workload.pq import ivfpq_recall_eval
 
     for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
         rows = {
@@ -555,7 +566,8 @@ def test_rendezvous_sharding_minimal_disruption(spark):
     landing on the NEW shard (survivors never reshuffle among old shards);
     assignments are deterministic across evaluations."""
     from pyspark.sql import functions as F
-    from arthur_redshift_etl_spark.workload import rendezvous_shard, t
+    from arthur_redshift_etl_spark.workload import t
+    from arthur_redshift_etl_spark.workload.pq import rendezvous_shard
 
     docs = t(spark, "/root/testdata/sf0.001", "documents")
     n = 8
@@ -593,7 +605,8 @@ def test_ivfpq_codes_table_partition_prunes(spark, tmp_path):
     from pyspark.sql import functions as F
     from arthur_redshift_etl_spark.operators import quantization as qz
     from arthur_redshift_etl_spark.operators import similarity as sim
-    from arthur_redshift_etl_spark.workload import PQ_K, PQ_M, PQ_SUB, t
+    from arthur_redshift_etl_spark.workload import t
+    from arthur_redshift_etl_spark.workload.pq import PQ_K, PQ_M, PQ_SUB
 
     emb = t(spark, "/root/testdata/sf0.001", "embeddings")
     centroids = emb.filter(F.col("vec_id") < PQ_K).select(
@@ -629,14 +642,14 @@ def test_ivfpq_full_probe_equals_plain_pq(spark):
     from pyspark.sql import functions as F
     from arthur_redshift_etl_spark.operators import quantization as qz
     from arthur_redshift_etl_spark.operators import similarity as sim
-    from arthur_redshift_etl_spark.workload import (
+    from arthur_redshift_etl_spark.workload import t
+    from arthur_redshift_etl_spark.workload.pq import (
         PQ_K,
         PQ_M,
         PQ_QUERY_ID,
         PQ_SUB,
         _pq_probe_ids,
         pq_adc_topk,
-        t,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -680,13 +693,13 @@ def test_ivfpq_search_operator_full_probe_full_pool_is_exact(spark):
     from pyspark.sql import functions as F
     from arthur_redshift_etl_spark.operators import quantization as qz
     from arthur_redshift_etl_spark.operators import similarity as sim
-    from arthur_redshift_etl_spark.workload import (
+    from arthur_redshift_etl_spark.workload import t
+    from arthur_redshift_etl_spark.workload.pq import (
         PQ_K,
         PQ_M,
         PQ_QUERY_ID,
         PQ_SUB,
         _pq_probe_ids,
-        t,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -741,13 +754,13 @@ def test_ivfpq_search_operator_pool_monotone(spark):
     from pyspark.sql import functions as F
     from arthur_redshift_etl_spark.operators import quantization as qz
     from arthur_redshift_etl_spark.operators import similarity as sim
-    from arthur_redshift_etl_spark.workload import (
+    from arthur_redshift_etl_spark.workload import t
+    from arthur_redshift_etl_spark.workload.pq import (
         PQ_K,
         PQ_M,
         PQ_QUERY_ID,
         PQ_SUB,
         _pq_probe_ids,
-        t,
     )
 
     sf = "/root/testdata/sf0.001"

@@ -7,10 +7,17 @@ the DuckDB value oracles, in the reference's test style (SURVEY §5).
 """
 
 import datetime
+import re
 
 import pytest
 
+from arthur_redshift_etl_spark.plans.lint import plan_text
 from arthur_redshift_etl_spark.workload import REGISTRY
+
+
+def plan_shape(df):
+    """The plans without expression and exchange ids, which differ per build."""
+    return re.sub(r"#\d+L?|plan_id=\d+", "", plan_text(df, "extended"))
 
 
 def _write(spark, tmp_path, table, rows, schema):
@@ -227,14 +234,18 @@ def test_ks_two_pass_fallback_matches_packed(spark, monkeypatch):
     # shrink the packing base so the sizing check fails on real sf0.001
     # cohorts (~750 each > 256) and the exact decimal two-pass fallback
     # runs; both paths are integer-exact, so every field must match the
-    # packed path bit-for-bit (ks_d is the same exact division)
-    from arthur_redshift_etl_spark import workload
+    # packed path bit-for-bit (ks_d is the same exact division).  The plans
+    # must differ, or the patch missed and the packed path ran twice.
+    from arthur_redshift_etl_spark.workload import stats
 
     sf = "/root/testdata/sf0.001"
-    packed = REGISTRY["ks_test_order_values"].fn(spark, sf).collect()[0]
-    monkeypatch.setattr(workload, "KS_PACK_BASE", 256)
-    fallback = REGISTRY["ks_test_order_values"].fn(spark, sf).collect()[0]
+    packed_df = REGISTRY["ks_test_order_values"].fn(spark, sf)
+    packed = packed_df.collect()[0]
+    monkeypatch.setattr(stats, "KS_PACK_BASE", 256)
+    fallback_df = REGISTRY["ks_test_order_values"].fn(spark, sf)
+    fallback = fallback_df.collect()[0]
     assert tuple(fallback) == tuple(packed)
+    assert plan_shape(packed_df) != plan_shape(fallback_df)
     assert fallback["d_numerator"] > 0  # non-degenerate on real data
 
 
@@ -244,9 +255,9 @@ def test_ks_pack_boundary_condition():
     # the 2^32 packing limit on n_b
     import math
 
-    from arthur_redshift_etl_spark import workload
+    from arthur_redshift_etl_spark.workload.stats import KS_PACK_BASE
 
-    base = workload.KS_PACK_BASE
+    base = KS_PACK_BASE
     balanced_cap = math.isqrt((1 << 63) - 1)
     assert balanced_cap < base  # product binds before packing when balanced
     assert balanced_cap == 3037000499
