@@ -37,7 +37,6 @@ nothing; ``ensure_heap_headroom`` is a no-op until potential free heap
 
 from __future__ import annotations
 
-import os
 import threading
 
 # A build needs MOST of a tight heap free: an absolute floor (256 MB ≈ 53%
@@ -46,9 +45,8 @@ import threading
 # alternating).  Demanding 3/4 of max free makes the 512 MB sequence GC
 # every query (10/10 pass); a well-sized driver only trips it when real
 # garbage piles up, and a GC then costs time proportional to LIVE data,
-# not heap size.  SPARK_GRAFT_HEAP_MIN_FREE overrides with absolute bytes.
+# not heap size.
 DEFAULT_MIN_FREE_FRACTION = 0.75
-_MIN_FREE_OVERRIDE = os.environ.get("SPARK_GRAFT_HEAP_MIN_FREE")
 
 
 def heap_report(spark) -> dict:
@@ -104,10 +102,9 @@ def ensure_heap_headroom(
 def _ensure_heap_headroom(spark, min_free_bytes: int | None = None) -> bool:
     """GC the driver when potential free heap drops below the floor.
 
-    Default floor: ``DEFAULT_MIN_FREE_FRACTION`` of max heap (or the
-    ``SPARK_GRAFT_HEAP_MIN_FREE`` absolute override).  Returns True when
-    a GC was triggered.  Call between sequential relation builds /
-    queries sharing one session; cost is three py4j getters on the fast
+    Default floor: ``DEFAULT_MIN_FREE_FRACTION`` of max heap.  Returns
+    True when a GC was triggered.  Call between sequential relation builds
+    / queries sharing one session; cost is three py4j getters on the fast
     path.
 
     Hysteresis: if the LAST GC could not reach the floor (a big driver
@@ -125,10 +122,7 @@ def _ensure_heap_headroom(spark, min_free_bytes: int | None = None) -> bool:
     try:
         rep = heap_report(spark)
         if min_free_bytes is None:
-            if _MIN_FREE_OVERRIDE is not None:
-                min_free_bytes = int(_MIN_FREE_OVERRIDE)
-            else:
-                min_free_bytes = int(rep["max"] * DEFAULT_MIN_FREE_FRACTION)
+            min_free_bytes = int(rep["max"] * DEFAULT_MIN_FREE_FRACTION)
         if rep["potential_free"] >= min_free_bytes:
             return False
         state = getattr(spark, _STATE_ATTR, None)

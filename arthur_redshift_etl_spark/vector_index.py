@@ -240,8 +240,8 @@ def verify_corpus(embeddings: DataFrame, meta: dict) -> None:
 # Above this many queries the batch plan ships the query set as a real
 # broadcast DataFrame instead of baked literal structs: plan size grows
 # O(|queries|*dim) on the literal path, re-creating the very compile tax
-# the batch exists to amortize (VERDICT r12 #4).  Crossover measured by
-# scripts/vector_batch_query_plan_ab.py — see SCALE.md.
+# the batch exists to amortize (VERDICT r12 #4).  The crossover is
+# unmeasured: 64 is a chosen cap, and SCALE.md has no number for it.
 LITERAL_BATCH_MAX = 64
 
 

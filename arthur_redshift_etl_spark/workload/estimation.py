@@ -898,7 +898,7 @@ def _vindex_dir(spark, sf_dir: str) -> str:
         # the oracle replicates the seed-centroid cosine configuration —
         # pin both training knobs off (r13 adds train_centroids, default
         # ON for production builds; the trained path's candidate-recall
-        # delta is measured in scripts/vector_index_trained_ab.py)
+        # delta is unmeasured)
         n_centroids=8, n_subspaces=4, train_iters=0, train_centroids=0,
     )
     _VINDEX_MEMO[key] = d

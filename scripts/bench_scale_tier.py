@@ -11,7 +11,7 @@ Only the relational core scales: events/documents/embeddings are copied
 verbatim, so the text/dedup/knn rows measure fixed-size work and are
 reported but excluded from the scaling-factor summary.  (Duplicating
 documents verbatim would manufacture quadratic near-dup pairs — a different
-experiment, covered by scripts/dedup_stress.py.)
+experiment, covered by c02a7ef:scripts/dedup_stress.py.)
 
 Run ALONE (32-core contention trap):  python scripts/bench_scale_tier.py
 """

@@ -94,6 +94,29 @@ def test_no_hysteresis_when_gc_reaches_the_floor(monkeypatch):
     assert len(gcs) == 2
 
 
+def test_default_floor_ignores_the_environment(monkeypatch):
+    """The default floor is 3/4 of max heap whatever the environment holds:
+    no variable read at import can lower it for one process and not another."""
+    import importlib
+
+    from arthur_redshift_etl_spark.plans import heap
+
+    monkeypatch.setenv("SPARK_GRAFT_HEAP_MIN_FREE", "1")
+    try:
+        importlib.reload(heap)
+        gcs = []
+        reports = [
+            {"max": 1000, "committed": 1000, "used": 300, "potential_free": 700},
+            {"max": 1000, "committed": 1000, "used": 100, "potential_free": 900},
+        ]
+        monkeypatch.setattr(heap, "heap_report", lambda s: reports.pop(0))
+        assert heap.ensure_heap_headroom(_fake_spark(gcs)) is True
+        assert len(gcs) == 1
+    finally:
+        monkeypatch.undo()
+        importlib.reload(heap)
+
+
 def test_probe_failure_never_raises(monkeypatch):
     """Advisory hygiene must not fail a buildable relation: a py4j error in
     the probe returns False instead of propagating into _build_all's
